@@ -217,15 +217,9 @@ def crawl_bench(cpus: int, n_pages: int, seed: int = 42) -> dict:
     n_seeds = int(os.environ.get("BENCH_SEEDS", "16384"))
     engine = CrawlEngine(
         spark, cfg, pages, robots,
-        materialize_outputs=bool(int(os.environ.get("BENCH_MAT", "0"))),
         verbose_timing=bool(int(os.environ.get("BENCH_VERBOSE", "0"))),
         transport_factory=transport_factory,
         transport_cache_key=f"corpus:{corpus_dir}" if corpus_dir else None,
-        # BENCH_CUCKOO=1 → measure the incremental cuckoo seen tier
-        # (per-superstep cogroup insert + zero-collect cogroup probe)
-        # against the default broadcast/bucketed anti-join
-        cuckoo_seen=bool(int(os.environ.get("BENCH_CUCKOO", "0"))),
-        bloom_prefilter=bool(int(os.environ.get("BENCH_BLOOM", "0"))),
     )
     # Materialize the corpus lookup fixture (redirect-resolved,
     # url-partitioned cache) OUTSIDE the crawl clock: it stands in for

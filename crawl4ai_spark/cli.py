@@ -29,6 +29,7 @@ second implementation.
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import sys
 
@@ -161,6 +162,13 @@ def cmd_crawl(args) -> None:
             respect_robots=args.respect_robots,
             max_iterations=max(50, 4 * args.max_depth),
         )
+        valid = sorted(f.name for f in dataclasses.fields(CrawlConfig))
+        unknown = sorted(set(overrides) - set(valid))
+        if unknown:
+            raise SystemExit(
+                f"unknown -c key(s) {', '.join(unknown)} for --deep-crawl; "
+                f"valid keys: {', '.join(valid)}"
+            )
         cfg_kw.update(overrides)
         cfg = CrawlConfig(**cfg_kw)
         robots = None

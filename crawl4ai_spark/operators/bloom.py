@@ -26,7 +26,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, IntegerType, StructField, StructType
 
@@ -118,70 +118,6 @@ def might_contain(
         return pd.Series(out)
 
     return hashed.withColumn(out_col, probe("h1", "h2", "bucket")).drop("h1", "h2", "bucket")
-
-
-# ── native split-block bloom (the crawl-loop path) ───────────────────
-#
-# The applyInPandas sidecar above is the general-purpose tool; the
-# crawl loop instead uses a SPLIT-BLOCK bloom (the Parquet bloom-filter
-# design, word-sized blocks): all k bits of a key live in ONE 64-bit
-# word, so build is a plain `groupBy(word).agg(bit_or(mask))` and probe
-# is a broadcast join + two bitwise ops — zero Python, zero driver
-# collect, and the filter is an ordinary DataFrame that snapshots
-# through the store like any other state.
-#
-# Layout: word index = pmod(h, n_words) (low bits); the 4 mask bit
-# positions come from the TOP 24 bits of h (disjoint from the index
-# bits, keeping block choice and in-block bits independent).
-# FP rate at load L keys/word: ~(popcount/64)^4 — e.g. 2 keys/word →
-# ~8 bits set → (8/64)^4 ≈ 2.4e-4.  No false negatives by
-# construction, so a "definitely new" verdict is always safe.
-
-BLOOM_MASK_BITS = 4
-
-
-def blocked_mask(hash_expr: str) -> Column:
-    """64-bit word with 4 bits set, positions taken from the hash's top
-    bits.  Built as a SQL expression because shiftleft's bit count must
-    be an expression here (the pyspark wrapper only takes literals)."""
-    parts = [
-        "shiftleft(CAST(1 AS BIGINT), "
-        f"CAST(shiftrightunsigned({hash_expr}, {64 - 6 * (j + 1)}) & 63 AS INT))"
-        for j in range(BLOOM_MASK_BITS)
-    ]
-    return F.expr("(" + " | ".join(parts) + ")")
-
-
-def blocked_bloom_build(df: DataFrame, hash_col: str, n_words: int) -> DataFrame:
-    """(word int, bits long) table from a 64-bit hash column.  One
-    map-side-combined aggregation; output has ≤ n_words rows."""
-    h = F.col(hash_col)
-    return (
-        df.select(
-            F.pmod(h, F.lit(n_words)).cast("int").alias("word"),
-            blocked_mask(hash_col).alias("mask"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("mask").alias("bits"))
-    )
-
-
-def blocked_bloom_probe(
-    df: DataFrame, bloom: DataFrame, hash_col: str, n_words: int,
-    out_col: str = "maybe_seen",
-) -> DataFrame:
-    """Adds boolean `out_col`: False ⇒ key definitely not in the set.
-    The bloom side is broadcast (n_words·16 B — a few MB even at 10^8
-    keys; at 10^10 swap the broadcast for a co-partitioned join on
-    `word`, same plan shape)."""
-    h = F.col(hash_col)
-    probe = df.withColumn("_w", F.pmod(h, F.lit(n_words)).cast("int"))
-    joined = probe.join(
-        F.broadcast(bloom.withColumnRenamed("word", "_w")), "_w", "left"
-    )
-    mask = blocked_mask(hash_col)
-    hit = F.col("bits").isNotNull() & (F.col("bits").bitwiseAND(mask) == mask)
-    return joined.withColumn(out_col, hit).drop("_w", "bits")
 
 
 def estimate_cardinality(bloom: DataFrame, m_bits: int = 1 << 16, k: int = 5) -> float:

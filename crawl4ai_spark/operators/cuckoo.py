@@ -6,10 +6,9 @@ never forget: once a URL's bits are set they stay set, so cache-expiry
 with TTL'd invalidation) need a full rebuild.  The cuckoo filter
 (partial-key cuckoo hashing, Fan et al. 2014 — public) supports
 **deletion** and **incremental insertion** at the same ~const bytes/key,
-which is why the scale design names "bloom/cuckoo" as the seen-set
-pair: bloom for the rebuild-per-superstep prefilter, cuckoo for the
-long-lived cross-run seen state that must drop entries when a page's
-cache entry expires.
+which makes it the long-lived cross-run seen state that must drop
+entries when a page's cache entry expires (the streaming crawl's seen
+gate, and plans/recrawl.forget_expired).
 
 Layout mirrors the bloom sidecar so it snapshots through the
 SnapshotStore like any other state: `n_shards` independent filters
@@ -39,7 +38,7 @@ Probe modes:
     probe via pandas_udf: right for a dim-sized filter.
   * cogroup  — shuffle candidates by shard and cogroup-join with the
     filter table, zero driver collect: the 10^10-key scale path (each
-    executor only ever holds its shards), used by the crawl loop.
+    executor only ever holds its shards), used by the streaming crawl.
 
 False-positive rate: P(fp collision in ≤ 2·SLOTS occupied slots)
 ≈ 8/2^16 ≈ 1.2e-4 at full load — same class as the reference's 1%
@@ -126,8 +125,9 @@ def _insert_shard(tab: np.ndarray, stash: np.ndarray, h1: np.ndarray) -> np.ndar
     violation: 'definitely new' for a crawled URL re-crawls it).
     Inserts therefore do NOT skip already-present fingerprints;
     instead, delete-exactness is the CALLER's contract: insert each
-    key at most once (callers add only exactly-new keys — the engine
-    and the streaming crawl both insert post-anti-join fresh sets),
+    key at most once (callers add only exactly-new keys — the
+    streaming crawl inserts post-anti-join fresh sets and rebuilds
+    from its DISTINCT seen urls),
     and delete only keys previously inserted.  Same-key duplicates
     WITHIN a batch are deduped below (identical h1 ⇒ same key —
     safe), so a caller-respecting filter holds exactly one copy per
@@ -329,7 +329,7 @@ def cuckoo_probe(
     broadcast can be unpersisted before returning — otherwise a caller
     probing in a loop (one probe per superstep) accumulates broadcast
     blocks for the session lifetime.  Loops that want a lazy plan
-    should use `cuckoo_probe_cogroup` (as the engine does)."""
+    should use `cuckoo_probe_cogroup` (as the streaming crawl does)."""
     blobs = {
         int(r["shard"]): _unpack(bytes(r["table"]), bytes(r["stash"]))
         for r in filt.collect()
@@ -402,9 +402,11 @@ def cuckoo_probe_cogroup(
 
 
 def cuckoo_cardinality(filt: DataFrame) -> int:
-    """Exact occupied-slot count.  Inserts are idempotent (re-adds
-    skip), so this approximates distinct inserted keys up to fp
-    collisions.  One small agg over n_shards rows."""
+    """Exact occupied-slot count (table slots + stash entries).
+    Under the insert-once contract this approximates distinct inserted
+    keys plus their collision duplicates; re-inserting a key (in a
+    later `cuckoo_add`) occupies another slot, so re-inserts inflate
+    the count.  One small agg over n_shards rows."""
     total = 0
     for r in filt.collect():
         tab, stash = _unpack(bytes(r["table"]), bytes(r["stash"]))

@@ -13,8 +13,8 @@ per-superstep driver-job floor was the measured scaling bottleneck):
     job 3  (collect)  per-host outcome counts + link upper bound —
                       a tiny agg on the cached step
     job 4  frontier   candidate explode → native filter/score →
-                      hash-keyed dedup + anti-join (8-byte shuffle
-                      keys, optional blocked-bloom prefilter) →
+                      hash-keyed dedup + anti-join (8-byte keys,
+                      broadcast or shuffled by frontier size) →
                       trim/seq (arithmetic, windowless) → merge
 
 State design: ONE frontier table subsumes the URL-seen set — every
@@ -25,9 +25,9 @@ frontier side (hash equality is treated as URL identity: at 10^10
 URLs the expected number of colliding 64-bit pairs is ~0.003, and a
 collision degrades to one URL never being crawled — the same error
 class the reference's bloom-filter traversal accepts at 1% FP,
-deep_crawling/crazy.py:53).  A split-block bloom derived from the
-frontier in-plan (operators.bloom.blocked_bloom_*, no driver collect)
-routes definitely-new candidates around the anti-join entirely.
+deep_crawling/crazy.py:53).  This anti-join is the ONE seen-set path:
+it broadcasts the frontier's hashes while the frontier is small
+(_BCAST_SEEN_MAX) and shuffles both sides on the hash beyond that.
 
 seq is arithmetic — (iteration << 40) | (batch_rank << 16) |
 link_pos — monotone in discovery order with NO global window; the
@@ -39,9 +39,8 @@ cannot bind.  Ordering parity with the reference is deterministic:
 Scale notes (10^10 frontier, 1000 executors):
 - the pages-corpus join streams the corpus through a broadcast semi
   probe; the corpus itself never shuffles, only the admitted batch;
-- per-superstep shuffle of the frontier is O(n) hashes; the next
-  step beyond this is bucketed/Iceberg storage so the seen side
-  keeps its partitioning across supersteps (store.py docstring);
+- per-superstep shuffle of the frontier is O(n) 8-byte hashes (the
+  seen anti-join's frontier side, once past the broadcast shortcut);
 - host backoff state lives driver-side as a dict (tiny at sandbox
   scale); at 10^8 hosts it becomes a MERGE'd dim table — the agg
   that feeds it is already computed distributed;
@@ -83,7 +82,6 @@ from crawl4ai_spark.extraction.udfs import EXTRACT_RESULT, extract_one
 from crawl4ai_spark.functions.specs import compile_filters_column, compile_scorer_column
 from crawl4ai_spark.functions.filters import valid_crawl_url
 from crawl4ai_spark.functions.urlnorm import canonicalize_for_crawl, get_host, is_valid_crawl_url
-from crawl4ai_spark.operators.bloom import blocked_bloom_build, blocked_bloom_probe
 from crawl4ai_spark.plans.config import BACKOFF_CODES, CrawlConfig
 from crawl4ai_spark.plans.rank import with_bucketed_rank, with_global_rank
 from crawl4ai_spark.plans.state import SnapshotStore
@@ -321,11 +319,7 @@ class CrawlEngine:
         store: SnapshotStore | None = None,
         checkpoint_every: int = 1,
         verbose_timing: bool = False,
-        materialize_outputs: bool = False,
-        bloom_prefilter: bool = False,
-        cuckoo_seen: bool = False,
         capture_plans: bool = False,
-        partition_pages: bool = True,
         transport_factory=None,
         transport_cache_key: str | None = None,
         pace_fetch: bool = False,
@@ -333,7 +327,6 @@ class CrawlEngine:
         cache_mode=None,
         robots_as_table: bool = False,
         host_state_as_table: bool = False,
-        bucketed_frontier: bool = False,
         link_score_fn=None,
     ) -> None:
         self.spark = spark
@@ -396,42 +389,12 @@ class CrawlEngine:
             pages_eff = p.join(
                 F.broadcast(rt_targets), F.col("redirect_to") == F.col("rt_url"), "left"
             ).drop("rt_url")
-            if partition_pages:
-                pages_eff = pages_eff.repartition(self._n_parts, "url").persist()
-            self.pages_eff = pages_eff
+            self.pages_eff = pages_eff.repartition(self._n_parts, "url").persist()
         self.robots = robots
         self.store = store
         self.checkpoint_every = checkpoint_every
         self.verbose_timing = verbose_timing
-        # Materialize per-iteration docs/log parts eagerly: releases
-        # the per-iteration step checkpoints for GC at the cost of two
-        # extra jobs per iteration.  Worth it on long runs / small
-        # heaps; off by default.
-        self.materialize_outputs = materialize_outputs
-        self.bloom_prefilter = bloom_prefilter
         self.capture_plans = capture_plans
-        # bloom sizing: target ~2 keys/word (FP ≈ 2.4e-4).  max_pages
-        # bounds crawled pages, not seen URLs; seen is typically a few
-        # × crawled, and overload only raises FP (never correctness).
-        cap = min(max(cfg.max_pages, 1), 1 << 24)
-        self._bloom_words = max(1 << 12, cap)
-        # cuckoo seen-set tier (operators.cuckoo): the INCREMENTAL,
-        # deletion-capable filter — built once from the seeds, then
-        # per superstep only the fresh hashes are inserted (cogroup on
-        # n_shards rows) and candidates probe via the zero-collect
-        # cogroup path.  vs the bloom tier (rebuilt from the frontier
-        # in-plan each superstep): cuckoo state is O(seen) bytes that
-        # persist ACROSS supersteps — at 10^10 keys the per-superstep
-        # rebuild is the cost you can't pay, incremental insert is.
-        self.cuckoo_seen = bool(cuckoo_seen)
-        self._cuckoo_df: DataFrame | None = None
-        self._cuckoo_shards = self._n_parts
-        # size shards so designed load ≤50% at seen ≈ 4× max_pages;
-        # overload degrades to stash probes, never to correctness
-        m = 1 << 8
-        while m * self._cuckoo_shards * 2 < cap * 4:
-            m <<= 1
-        self._cuckoo_m = m
         # J4 robots gate: closure mode collects the (host → rules) dim
         # into the UDF (fine while robots is broadcast-small); table
         # mode (robots_as_table=True, the 10^8-host scale path) NEVER
@@ -464,11 +427,6 @@ class CrawlEngine:
         self._host_df: DataFrame | None = None
         if self.host_state_as_table and cfg.track_host_state:
             self._host_df = self._empty("host string, delay double, fails int")
-        # §4.2.3 bucketed frontier: keep the frontier checkpoint hash-
-        # partitioned by url_hash so the seen anti-join consumes it
-        # with NO exchange on the seen side (the in-sandbox analogue of
-        # Iceberg bucket storage + storage-partitioned joins).
-        self.bucketed_frontier = bool(bucketed_frontier)
         self.link_score_fn = link_score_fn
         if cfg.mode == "best_first":
             # reference min-heap: lower score first, FIFO tiebreak
@@ -567,21 +525,6 @@ class CrawlEngine:
     # cost in the hot loop.
     _CKPT_HOT_LEVEL = StorageLevel.MEMORY_AND_DISK_DESER
 
-    def _ckpt_bucketed(self, df: DataFrame) -> DataFrame:
-        """localCheckpoint that PRESERVES HashPartitioning(url_hash).
-        Under AQE the checkpoint captures AdaptiveSparkPlanExec's
-        partitioning as Unknown (measured: the seen-side exchange
-        reappears), so this one job runs with AQE off; every other job
-        in the loop keeps AQE.  On Iceberg this whole concern becomes
-        a bucket(url_hash) table write."""
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return df.localCheckpoint(eager=True, storageLevel=self._CKPT_HOT_LEVEL)
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev)
-
     # ── seeds ────────────────────────────────────────────────────────
     def _seed_frontier(self, seeds: list[str]) -> tuple[DataFrame, CrawlState]:
         state = CrawlState()
@@ -606,29 +549,9 @@ class CrawlEngine:
     # ── main loop ────────────────────────────────────────────────────
     def run(self, seeds: list[str]) -> CrawlResultTables:
         frontier, state = self._seed_frontier(seeds)
-        if self.bucketed_frontier:
-            # hash-bucket the seed frontier once; every subsequent
-            # checkpoint preserves the bucketing (see _iterate merge)
-            frontier = self._ckpt_bucketed(
-                frontier.repartition(self._n_parts, "url_hash")
-            )
-        if self.cuckoo_seen:
-            self._cuckoo_init(frontier)
         docs = self._empty(self._DOCS_COLS)
         log = self._empty(self._LOG_COLS)
         return self._loop(frontier, docs, log, state)
-
-    def _cuckoo_init(self, frontier: DataFrame) -> None:
-        """Seed the incremental cuckoo seen-filter from the frontier's
-        url_hash column (run start: seeds; resume: full seen set)."""
-        from crawl4ai_spark.operators.cuckoo import cuckoo_add, empty_cuckoo
-
-        self._cuckoo_df = cuckoo_add(
-            empty_cuckoo(self.spark, self._cuckoo_shards, self._cuckoo_m),
-            frontier.select("url_hash"),
-            hash_col="url_hash",
-            n_shards=self._cuckoo_shards,
-        ).localCheckpoint(eager=True, storageLevel=self._CKPT_HOT_LEVEL)
 
     @staticmethod
     def _union_parts(base: DataFrame, parts: list[DataFrame]) -> DataFrame:
@@ -658,11 +581,6 @@ class CrawlEngine:
             except Exception:
                 pass  # resuming a dict-mode snapshot: start empty
         frontier = self.store.load(self.spark, "frontier")
-        if self.cuckoo_seen:
-            # one distributed rebuild from the snapshot (frontier ⊇
-            # seen); at Iceberg scale the filter table itself would be
-            # snapshotted and loaded instead — same (shard, blob) rows
-            self._cuckoo_init(frontier)
         docs = self.store.load(self.spark, "docs")
         log = self.store.load(self.spark, "crawl_log")
         return self._loop(frontier, docs, log, state)
@@ -1230,54 +1148,14 @@ class CrawlEngine:
                 .select("ch", "_first.*")
             )
             # seen-set anti-join (J1): frontier side ships ONLY 8-byte
-            # hashes; optional blocked-bloom prefilter (derived from
-            # the frontier in this same plan — no driver collect)
-            # routes definitely-new rows around the join.
+            # hashes — the one seen-set path (frontier ⊇ seen).
             seen_hashes = frontier.select(F.col("url_hash").alias("ch"))
-            if self.bucketed_frontier:
-                # §4.2.3: the frontier checkpoint is HashPartitioning
-                # (url_hash, n_parts) — localCheckpoint's LogicalRDD
-                # advertises it, the url_hash→ch Project preserves it
-                # through the alias, and the probe side comes out of
-                # groupBy(ch) with the same partitioning, so Ensure-
-                # Requirements inserts NO exchange on either side
-                # (asserted by test_bucketed_frontier_no_seen_exchange).
-                # This is the storage-partitioned-join analogue of
-                # Iceberg bucket(url_hash) tables: the seen side's
-                # partitioning survives ACROSS supersteps instead of
-                # being re-derived each superstep.
-                pass
-            elif state.frontier_ub <= _BCAST_SEEN_MAX:
-                # small-N shortcut: ≤4M hashes broadcast (~32 MB) →
+            if state.frontier_ub <= _BCAST_SEEN_MAX:
+                # small-N shortcut: ≤512k hashes broadcast (~4 MB) →
                 # BroadcastHashJoin LeftAnti, zero exchanges; beyond
                 # that the hash-partitioned shuffle anti-join takes over
                 seen_hashes = F.broadcast(seen_hashes)
-            def _route_probed(probed: DataFrame) -> DataFrame:
-                # shared prefilter routing: False ⇒ definitely unseen
-                # (no false negatives for inserted keys) bypasses the
-                # exact anti-join; True (seen or the FP floor) pays it
-                definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-                maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-                return definitely_new.unionByName(
-                    maybe.join(seen_hashes, "ch", "left_anti")
-                )
-
-            if self.cuckoo_seen and self._cuckoo_df is not None:
-                # cuckoo tier: candidates shuffle once on shard and
-                # probe the persistent filter (zero driver collect)
-                from crawl4ai_spark.operators.cuckoo import cuckoo_probe_cogroup
-
-                fresh = _route_probed(cuckoo_probe_cogroup(
-                    deduped, self._cuckoo_df, hash_col="ch",
-                    n_shards=self._cuckoo_shards, out_col="maybe_seen",
-                ))
-            elif self.bloom_prefilter:
-                bloom = blocked_bloom_build(frontier, "url_hash", self._bloom_words)
-                fresh = _route_probed(blocked_bloom_probe(
-                    deduped, bloom, "ch", self._bloom_words, out_col="maybe_seen"
-                ))
-            else:
-                fresh = deduped.join(seen_hashes, "ch", "left_anti")
+            fresh = deduped.join(seen_hashes, "ch", "left_anti")
             if self.capture_plans:
                 self.last_plans["seen_join"] = (
                     fresh._jdf.queryExecution().executedPlan().toString()
@@ -1339,12 +1217,7 @@ class CrawlEngine:
         # coalesce: unions sum their parents' partition counts, so
         # without this the state table gains ~2·n_parts partitions per
         # superstep and task-launch overhead grows linearly with
-        # iteration count (narrow op — no shuffle).  Bucketed mode
-        # instead repartitions by url_hash: the checkpoint then
-        # ADVERTISES HashPartitioning(url_hash) to the next superstep's
-        # seen anti-join (one skinny-row shuffle here buys an exchange-
-        # free join there; on Iceberg this is a bucket(url_hash) table
-        # write and costs nothing extra).
+        # iteration count (narrow op — no shuffle).
         from pyspark.sql import Observation
 
         obs_frontier = Observation(f"frontier_{iteration}")
@@ -1354,18 +1227,12 @@ class CrawlEngine:
             F.sum(F.when(is_pending, 1).otherwise(0)).alias("n_pending"),
             F.min(F.when(is_pending, F.col("depth"))).alias("min_pending_depth"),
         )
-        if self.bucketed_frontier:
-            frontier_next = frontier_next.repartition(n_parts, "url_hash")
-        else:
-            frontier_next = frontier_next.coalesce(n_parts)
+        frontier_next = frontier_next.coalesce(n_parts)
         if self.capture_plans:
             self.last_plans["frontier"] = (
                 frontier_next._jdf.queryExecution().executedPlan().toString()
             )
-        if self.bucketed_frontier:
-            frontier_next = self._ckpt_bucketed(frontier_next)
-        else:
-            frontier_next = frontier_next.localCheckpoint(eager=True, storageLevel=self._CKPT_HOT_LEVEL)
+        frontier_next = frontier_next.localCheckpoint(eager=True, storageLevel=self._CKPT_HOT_LEVEL)
         _obs_f = obs_frontier.get
         state.pending_count = int(_obs_f["n_pending"] or 0)
         state.min_pending_depth = (
@@ -1407,13 +1274,11 @@ class CrawlEngine:
                     F.lit("trimmed")
                 ),
             ).drop("trim_rank")
-            retrimmed = frontier_next.filter(~is_fresh).unionByName(fresh_rows)
-            if self.bucketed_frontier:
-                retrimmed = self._ckpt_bucketed(
-                    retrimmed.repartition(n_parts, "url_hash")
-                )
-            else:
-                retrimmed = retrimmed.coalesce(n_parts).localCheckpoint(eager=True, storageLevel=self._CKPT_HOT_LEVEL)
+            retrimmed = (
+                frontier_next.filter(~is_fresh).unionByName(fresh_rows)
+                .coalesce(n_parts)
+                .localCheckpoint(eager=True, storageLevel=self._CKPT_HOT_LEVEL)
+            )
             frontier_next.unpersist()
             frontier_next = retrimmed
             # the trim re-marked exactly (n_fresh - capacity) pending
@@ -1423,39 +1288,10 @@ class CrawlEngine:
         # entries) — a tight bound keeps the small-N plan shortcuts
         # live as long as they're actually profitable
         state.frontier_ub += n_fresh
-        if self.cuckoo_seen and self._cuckoo_df is not None and n_fresh > 0:
-            # incremental seen-insert: ONLY this superstep's fresh
-            # hashes (incl. capacity-trimmed rows — trimmed is seen)
-            # cogroup into the n_shards filter rows.  Checkpointed so
-            # filter lineage stays one superstep deep, like the
-            # frontier.  Insert-once discipline (the delete-exactness
-            # contract of operators/cuckoo): seeds enter ONLY via
-            # `_cuckoo_init` (enqueue_iter 0 < the first superstep's
-            # iteration 1, so this filter never re-adds them) and
-            # fresh entries are post-seen-gate new — each key enters
-            # the filter exactly once, so a later single
-            # `cuckoo_delete` (plans/recrawl.forget_expired) removes
-            # it exactly; remaining duplicates are only the
-            # distinct-key fp collisions that MAKE deletion safe.
-            from crawl4ai_spark.operators.cuckoo import cuckoo_add
-
-            prev_cuckoo = self._cuckoo_df
-            self._cuckoo_df = cuckoo_add(
-                prev_cuckoo,
-                frontier_next.filter(F.col("enqueue_iter") == iteration).select("url_hash"),
-                hash_col="url_hash",
-                n_shards=self._cuckoo_shards,
-            ).localCheckpoint(eager=True, storageLevel=self._CKPT_HOT_LEVEL)
-            prev_cuckoo.unpersist()
-
         new_log = step.select(
             F.lit(iteration).alias("iteration"), "url", "depth", "score",
             "parent_url", "seq", "outcome", "batch_rank",
         )
-        if self.materialize_outputs:
-            new_docs = new_docs.localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
-            new_log = new_log.localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
-            step.unpersist()
         _mark("merge")
         if self.verbose_timing:
             print(

@@ -41,7 +41,7 @@ URL's document is written exactly once per crawl, with no loss
 window.
 
 Scale notes: identical join/UDF shapes to the batch engine (which is
-the tuned path — politeness admission, budgets, bucketed state); this
+the tuned path — politeness admission, budgets, snapshot state); this
 driver trades those controls for always-on incremental delivery.
 Ordering is micro-batch BFS-like; the invariants (URL-seen set,
 per-document span sequences) match the batch engine exactly and are
@@ -103,12 +103,15 @@ class StreamingCrawl:
         # restart on an existing workdir (the stream checkpoint's
         # resume flow): the seen directory persists but the filter is
         # process state — rebuild it, else previously-seen URLs probe
-        # as definitely-new and bypass the exact anti-join (re-crawl)
+        # as definitely-new and bypass the exact anti-join (re-crawl).
+        # DISTINCT urls: a replayed seen mark can leave duplicate rows,
+        # and each key must enter the filter once so a later single
+        # cuckoo_delete (plans/recrawl.forget_expired) stays exact
         prior = self._read_seen()
         if prior is not None:
             self._cuckoo = cuckoo_add(
                 self._cuckoo,
-                prior.select(F.xxhash64("url").alias("url_hash")),
+                prior.distinct().select(F.xxhash64("url").alias("url_hash")),
                 hash_col="url_hash",
                 n_shards=cuckoo_shards,
             ).localCheckpoint(eager=True)

@@ -117,6 +117,17 @@ def test_deep_crawl_rejects_md_fit(site):
     assert "not supported with --deep-crawl" in r.stderr
 
 
+def test_deep_crawl_rejects_unknown_config_key(site):
+    r = _run([
+        "crawl", f"http://127.0.0.1:{site}/page_0.html",
+        "--deep-crawl", "bfs", "-c", "max_page=5",
+    ], timeout=120)
+    assert r.returncode != 0
+    assert "unknown -c key(s) max_page" in r.stderr
+    assert "valid keys:" in r.stderr and "max_pages" in r.stderr
+    assert "Traceback" not in r.stderr
+
+
 def test_single_page_respects_robots(site, tmp_path_factory):
     """--respect-robots on the single-page path gates the output: a
     disallowed page exits 2 with a block message."""

@@ -104,11 +104,21 @@ def _assert_parity(sim, eng):
     assert eng.state.pages_crawled == sim.pages_crawled
 
 
+BFS_SCORED_CFG = dict(
+    mode="bfs", max_depth=3, max_pages=60, scorer=SCORER,
+    base_budget=2, global_budget=16, max_iterations=40,
+)
+BUDGET_CFG = dict(mode="bfs", max_depth=4, max_pages=17,
+                  base_budget=4, global_budget=8, max_iterations=40)
+DFS_CFG = dict(
+    mode="dfs", max_depth=4, max_pages=40,
+    base_budget=64, global_budget=1,   # strict one-pop DFS
+    max_retries=0, max_iterations=60,
+)
+
+
 def test_bfs_parity(spark):
-    cfg = CrawlConfig(
-        mode="bfs", max_depth=3, max_pages=60, scorer=SCORER,
-        base_budget=2, global_budget=16, max_iterations=40,
-    )
+    cfg = CrawlConfig(**BFS_SCORED_CFG)
     sim, eng = _run_both(spark, cfg)
     assert sim.pages_crawled > 10  # the crawl actually went somewhere
     assert any(o["outcome"] in ("retry", "gave_up") for o in sim.crawl_order) or True
@@ -173,36 +183,6 @@ def test_fetch_seam_parity(spark):
     _assert_parity(sim, eng)
 
 
-def test_bloom_prefilter_parity(spark):
-    """The blocked-bloom seen-set prefilter (operators.bloom) must not
-    change any crawl observable — no false negatives, and false
-    positives only route rows through the exact anti-join."""
-    cfg = CrawlConfig(
-        mode="bfs", max_depth=3, max_pages=60, scorer=SCORER,
-        base_budget=2, global_budget=16, max_iterations=40,
-    )
-    pages, robots, seeds, pages_df, robots_df = _build_inputs(spark)
-    sim = simulate_crawl(pages, robots, seeds, cfg)
-    eng = CrawlEngine(spark, cfg, pages_df, robots_df, bloom_prefilter=True).run(seeds)
-    _assert_parity(sim, eng)
-
-
-def test_cuckoo_seen_parity(spark):
-    """The incremental cuckoo seen-filter tier (operators.cuckoo) must
-    not change any crawl observable: no false negatives for inserted
-    keys, false positives only route rows through the exact anti-join,
-    and the per-superstep incremental insert keeps the filter ≡ the
-    frontier's url_hash set at every superstep boundary."""
-    cfg = CrawlConfig(
-        mode="bfs", max_depth=3, max_pages=60, scorer=SCORER,
-        base_budget=2, global_budget=16, max_iterations=40,
-    )
-    pages, robots, seeds, pages_df, robots_df = _build_inputs(spark)
-    sim = simulate_crawl(pages, robots, seeds, cfg)
-    eng = CrawlEngine(spark, cfg, pages_df, robots_df, cuckoo_seen=True).run(seeds)
-    _assert_parity(sim, eng)
-
-
 def test_seen_join_ships_hashes_only(spark):
     """Plan assertion: the seen anti-join's frontier side projects
     ONLY the 8-byte url_hash — no string column shuffles through the
@@ -225,11 +205,7 @@ def test_seen_join_ships_hashes_only(spark):
 
 def test_dfs_parity(spark):
     """DFS (O3): engine ≡ simulator with LIFO admission."""
-    cfg = CrawlConfig(
-        mode="dfs", max_depth=4, max_pages=40,
-        base_budget=64, global_budget=1,   # strict one-pop DFS
-        max_retries=0, max_iterations=60,
-    )
+    cfg = CrawlConfig(**DFS_CFG)
     sim, eng = _run_both(spark, cfg)
     assert sim.pages_crawled > 10
     _assert_parity(sim, eng)
@@ -298,8 +274,7 @@ def test_dfs_simulator_matches_reference_stack():
 
 
 def test_max_pages_budget(spark):
-    cfg = CrawlConfig(mode="bfs", max_depth=4, max_pages=17,
-                      base_budget=4, global_budget=8, max_iterations=40)
+    cfg = CrawlConfig(**BUDGET_CFG)
     sim, eng = _run_both(spark, cfg)
     _assert_parity(sim, eng)
     assert eng.state.pages_crawled <= 17
@@ -370,7 +345,7 @@ def test_robots_table_parity(spark):
 
 def test_both_tables_parity(spark):
     """The full at-scale configuration — robots dim join + host-state
-    dim + bucketed frontier together — still matches the simulator."""
+    dim together — still matches the simulator."""
     cfg = CrawlConfig(
         mode="best_first", max_depth=4, max_pages=50, scorer=SCORER,
         score_threshold=0.05, base_budget=3, global_budget=10, max_iterations=40,
@@ -379,34 +354,55 @@ def test_both_tables_parity(spark):
     sim = simulate_crawl(pages, robots, seeds, cfg)
     eng = CrawlEngine(
         spark, cfg, pages_df, robots_df,
-        robots_as_table=True, host_state_as_table=True, bucketed_frontier=True,
+        robots_as_table=True, host_state_as_table=True,
     ).run(seeds)
     _assert_parity(sim, eng)
 
 
-def test_bucketed_frontier_no_seen_exchange(spark):
-    """§4.2.3 plan assertion: with bucketed_frontier=True the frontier
-    checkpoint advertises HashPartitioning(url_hash), so the seen
-    anti-join consumes it with NO exchange on the seen side — the only
-    hash exchange in the fresh-candidate plan is the probe-side link
-    dedup.  (Auto-broadcast is disabled to expose the at-scale shape;
-    the small-N broadcast shortcut is bypassed by the flag.)"""
+@pytest.mark.parametrize(
+    "cfg_kw, ranks",
+    [
+        (BFS_SCORED_CFG, {("global", "batch_rank")}),
+        (DFS_CFG, {("bucketed", "batch_rank")}),
+        (BUDGET_CFG, {("bucketed", "batch_rank"), ("bucketed", "trim_rank")}),
+    ],
+    ids=["bfs_scored_global_rank", "dfs_bucketed_rank", "budget_capacity_trim"],
+)
+def test_at_scale_plan_parity(spark, monkeypatch, cfg_kw, ranks):
+    """The at-scale plan shapes on a small web: with both small-N
+    shortcuts switched off (and Spark's auto-broadcast disabled) the
+    seen anti-join shuffles both sides on the hash, and admission uses
+    the two-phase ranks — with_global_rank for the scored BFS,
+    with_bucketed_rank for DFS and the unscored budget crawl, whose
+    capacity trim also binds.  The crawl must still equal the
+    simulator's."""
+    from crawl4ai_spark.plans import crawl as crawl_mod
+
+    monkeypatch.setattr(crawl_mod, "_SMALL_PENDING_MAX", 0)
+    monkeypatch.setattr(crawl_mod, "_BCAST_SEEN_MAX", 0)
+    used = set()
+
+    def spy(kind, fn, col_pos):
+        def wrapped(*a, **kw):
+            used.add((kind, a[col_pos]))
+            return fn(*a, **kw)
+        return wrapped
+
+    monkeypatch.setattr(crawl_mod, "with_global_rank",
+                        spy("global", crawl_mod.with_global_rank, 2))
+    monkeypatch.setattr(crawl_mod, "with_bucketed_rank",
+                        spy("bucketed", crawl_mod.with_bucketed_rank, 3))
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        cfg = CrawlConfig(mode="bfs", max_depth=2, max_pages=30,
-                          base_budget=8, global_budget=16, max_iterations=3)
+        cfg = CrawlConfig(**cfg_kw)
         pages, robots, seeds, pages_df, robots_df = _build_inputs(spark)
-        eng_obj = CrawlEngine(
-            spark, cfg, pages_df, robots_df,
-            bucketed_frontier=True, capture_plans=True,
-        )
-        eng_obj.run(seeds)
-        plan = eng_obj.last_plans.get("seen_join", "")
-        assert "LeftAnti" in plan
-        # exactly ONE hash exchange: the probe-side groupBy; the seen
-        # (frontier) side feeds the join partition-aligned from its
-        # checkpoint
-        assert plan.count("Exchange hashpartitioning") == 1, plan
+        sim = simulate_crawl(pages, robots, seeds, cfg)
+        eng_obj = CrawlEngine(spark, cfg, pages_df, robots_df, capture_plans=True)
+        eng = eng_obj.run(seeds)
+        _assert_parity(sim, eng)
+        plan = eng_obj.last_plans["seen_join"]
+        assert "LeftAnti" in plan and "Broadcast" not in plan, plan
+        assert ranks <= used, used
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

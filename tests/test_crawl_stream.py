@@ -154,3 +154,47 @@ def test_stream_crash_before_seen_mark_loses_nothing(spark, tmp_path):
     # no duplicate documents from the replayed epoch
     assert sc2.docs().count() == len(want_docs)
     assert sc2.seen().count() == len(want_seen)
+
+
+def test_stream_restart_rebuilds_filter_from_distinct_seen(
+    spark, tmp_path, monkeypatch
+):
+    """A duplicate row in the seen directory (a replayed seen mark)
+    must not put a second copy of its key into the filter rebuilt on
+    restart: the insert-once contract is what lets ONE cuckoo_delete
+    (plans/recrawl.forget_expired) forget the URL exactly.  The keys
+    handed to cuckoo_add are checked directly, because the shard
+    kernel's own intra-batch dedup would otherwise mask a duplicate."""
+    import pyspark.sql.functions as F
+
+    from crawl4ai_spark.operators import cuckoo as C
+    from crawl4ai_spark.streaming import crawl_stream
+
+    pages = spark.createDataFrame(synthetic_pages_pdf(WEB)).cache()
+    workdir = str(tmp_path / "dup")
+    sc = StreamingCrawl(spark, pages, workdir, max_depth=0)
+    sc.seed(seed_urls(WEB, 3))
+    sc.run_to_exhaustion()
+    url = sorted(r["url"] for r in sc.seen().collect())[0]
+    spark.createDataFrame([(url,)], "url string").write.mode("append").parquet(sc.seen_dir)
+    assert sc.seen().filter(F.col("url") == url).count() == 2
+
+    # restart on the same workdir; record the keys the rebuild inserts
+    inserted = []
+    real_add = crawl_stream.cuckoo_add
+
+    def recording_add(filt, keys, *a, **kw):
+        inserted.extend(r[0] for r in keys.collect())
+        return real_add(filt, keys, *a, **kw)
+
+    monkeypatch.setattr(crawl_stream, "cuckoo_add", recording_add)
+    sc2 = StreamingCrawl(spark, pages, workdir, max_depth=0)
+    monkeypatch.undo()
+    assert len(inserted) == len(set(inserted)) == 3
+
+    key = spark.createDataFrame([(url,)], "url string").select(
+        F.xxhash64("url").alias("h")
+    )
+    filt = C.cuckoo_delete(sc2._cuckoo, key, hash_col="h")
+    probed = C.cuckoo_probe_cogroup(key, filt, hash_col="h").collect()
+    assert probed[0]["maybe_seen"] is False
