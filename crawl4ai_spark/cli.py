@@ -226,8 +226,8 @@ def cmd_crawl(args) -> None:
     fetch = make_fetch_udf(_transport_factory, cache_key="cli-urllib")
     robots_map = None
     if args.respect_robots:
-        # closure-mode robots gate in the step UDF (the engine's J4
-        # small-dim path): a disallowed page reports robots_ok=False
+        # robots gate in the step UDF's closure (the engine's J4
+        # path): a disallowed page reports robots_ok=False
         h_, rules_ = _fetch_robots(args.url)
         robots_map = {h_: rules_}
     step = make_step_udf(robots_map, overrides.get("user_agent", "crawl4ai-spark"))
@@ -241,7 +241,6 @@ def cmd_crawl(args) -> None:
             step(
                 F.col("url"), F.lit(host), F.coalesce("f.final_url", "url"),
                 F.col("f.html"), F.col("f.status_code"),
-                F.lit(None).cast("string"),
             ).alias("ex"),
         )
     )
@@ -260,7 +259,6 @@ def cmd_crawl(args) -> None:
                 step(
                     F.col("url"), F.lit(host), F.coalesce("f.final_url", "url"),
                     F.col("f.html"), F.col("f.status_code"),
-                    F.lit(None).cast("string"),
                 ).alias("ex"),
                 make_fit_markdown_udf()(F.col("url"), F.col("f.html"))
                 .alias("fit_markdown"),

@@ -39,6 +39,7 @@ from crawl4ai_spark.operators.adaptive import (
     new_terms_per_iteration,
     saturation,
 )
+from crawl4ai_spark.plans.state import SnapshotStore
 
 __all__ = ["DigestConfig", "DigestResult", "adaptive_digest"]
 
@@ -132,31 +133,25 @@ def _save_digest_state(
     kb_emb: DataFrame | None = None,
 ) -> None:
     """CrawlState.save (reference adaptive_crawler.py:53-80) in Spark
-    form: the KB / pending-link / embedding-KB tables persist as
-    parquet (they are DataFrames — text never collects), the scalar
-    state (crawl order, metrics, history, query) as one JSON.  Written
-    once per completed iteration + once at loop end (digest
-    :1385,:1402), overwrite-style so the directory always holds one
-    consistent snapshot."""
-    import json as _json
-    import os as _os
-
-    _os.makedirs(path, exist_ok=True)
-    kb.write.mode("overwrite").parquet(_os.path.join(path, "kb"))
+    form: one SnapshotStore commit of the KB / pending-link /
+    embedding-KB tables (they are DataFrames — text never collects)
+    with the scalar state (crawl order, metrics, history, query) in
+    the manifest.  Written once per completed iteration + once at loop
+    end (digest :1385,:1402); the manifest swap is the commit point,
+    so a crash mid-save leaves the previous save loadable."""
+    tables = {"kb": kb}
     if pending is not None:
-        pending.write.mode("overwrite").parquet(_os.path.join(path, "pending"))
+        tables["pending"] = pending
     if kb_emb is not None:
-        kb_emb.write.mode("overwrite").parquet(_os.path.join(path, "kb_emb"))
-    meta = {
-        "strategy": strategy, "query": query, "crawled": list(crawled),
-        "metrics": {k: v for k, v in metrics.items()},
-        "history": history, "depth": depth,
-        "has_pending": pending is not None, "has_kb_emb": kb_emb is not None,
-    }
-    tmp = _os.path.join(path, "_state.json.tmp")
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, _os.path.join(path, "_state.json"))
+        tables["kb_emb"] = kb_emb
+    SnapshotStore(path).commit(
+        snapshot_id=depth,
+        tables=tables,
+        state={
+            "strategy": strategy, "query": query, "crawled": list(crawled),
+            "metrics": dict(metrics), "history": history, "depth": depth,
+        },
+    )
 
 
 def _load_digest_state(spark: SparkSession, path: str, strategy: str) -> dict:
@@ -164,30 +159,20 @@ def _load_digest_state(spark: SparkSession, path: str, strategy: str) -> dict:
     mismatch: the two strategies keep different derived state (the
     embedding KB is near-dup-deduped in crawl order) and silently
     rebuilding it would diverge from an uninterrupted run."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_state.json")) as f:
-        meta = _json.load(f)
+    store = SnapshotStore(path)
+    m = store.read_manifest()
+    if m is None:
+        raise FileNotFoundError(f"no saved digest state at {path!r}")
+    meta = m["state"]
     if meta["strategy"] != strategy:
         raise ValueError(
             f"state at {path!r} was saved by the {meta['strategy']!r} "
             f"strategy; resuming with {strategy!r} is not supported"
         )
     out = dict(meta)
-    out["kb"] = spark.read.parquet(
-        _os.path.join(path, "kb")
-    ).localCheckpoint(eager=True)
-    out["pending"] = (
-        spark.read.parquet(_os.path.join(path, "pending"))
-        .localCheckpoint(eager=True)
-        if meta["has_pending"] else None
-    )
-    out["kb_emb"] = (
-        spark.read.parquet(_os.path.join(path, "kb_emb"))
-        .localCheckpoint(eager=True)
-        if meta.get("has_kb_emb") else None
-    )
+    for name in ("kb", "pending", "kb_emb"):
+        df = store.load(spark, name)
+        out[name] = None if df is None else df.localCheckpoint(eager=True)
     return out
 
 

@@ -41,9 +41,9 @@ Scale notes (10^10 frontier, 1000 executors):
   probe; the corpus itself never shuffles, only the admitted batch;
 - per-superstep shuffle of the frontier is O(n) 8-byte hashes (the
   seen anti-join's frontier side, once past the broadcast shortcut);
-- host backoff state lives driver-side as a dict (tiny at sandbox
-  scale); at 10^8 hosts it becomes a MERGE'd dim table — the agg
-  that feeds it is already computed distributed;
+- host backoff state and robots rules live driver-side (a dict
+  updated from the per-host outcome collect, and the rules map in the
+  fused UDF's closure), so both are bounded by driver memory;
 - the fused UDF means one Python worker per task, and the explicit
   repartition before it pins the stage width to the configured
   parallelism (AQE's advisory-size coalescing would otherwise shrink
@@ -136,7 +136,6 @@ def spans_struct(ex) -> "F.Column":
 
 
 def make_step_udf(robots_map: dict[str, str] | None, user_agent: str,
-                  rules_from_col: bool = False,
                   markdown_dialect: str = "house"):
     """ONE fused Arrow UDF for all per-page Python work: the fetch
     robots gate, scrape→markdown→spans extraction, and per-link
@@ -148,25 +147,16 @@ def make_step_udf(robots_map: dict[str, str] | None, user_agent: str,
     and separate nodes pay Arrow serialization of the ~9 KB html per
     hop.  One node, one worker, one transfer.
 
-    Two robots modes (J4):
-    - closure mode (rules_from_col=False): robots_map is the collected
-      (host → rules) dim — legitimate while the dim is broadcast-small.
-      The UDF gates BOTH the page fetch and every discovered link.
-    - dim-join mode (rules_from_col=True, the 10^8-host scale path):
-      the page's own rules arrive as a JOINED COLUMN (no driver
-      collect anywhere); the UDF gates only the page fetch, and the
-      engine gates links downstream via a robots dim join + vectorized
-      can_fetch over the exploded link set.  Link-level checks are
-      order-independent (no side effects before the seen-set insert),
-      so gating links before vs after the native filters is semantics-
-      preserving — the parity suite pins both paths to the simulator.
+    Robots gate (J4): robots_map is the collected (host → rules) dim,
+    held in the UDF's closure (None = no gate).  The UDF gates BOTH the
+    page fetch and every discovered link, with one parser per host.
     """
     from crawl4ai_spark.sources.robots import build_parser
 
     @pandas_udf(STEP_EX)
     def step_udf(
         url: pd.Series, host: pd.Series, final_url: pd.Series,
-        html: pd.Series, eff_status: pd.Series, rules_col: pd.Series,
+        html: pd.Series, eff_status: pd.Series,
     ) -> pd.DataFrame:
         parsers: dict[str, object] = {}
 
@@ -180,17 +170,6 @@ def make_step_udf(robots_map: dict[str, str] | None, user_agent: str,
             if p is None:
                 p = build_parser(rules)
                 parsers[h] = p
-            return bool(p.can_fetch(user_agent, u))
-
-        # dim-join mode: parser memoized per distinct rules TEXT (hosts
-        # sharing a rules body share one parser within the batch)
-        def allowed_by_rules(u: str, rules: str | None) -> bool:
-            if rules is None or not rules.strip():
-                return True
-            p = parsers.get(rules)
-            if p is None:
-                p = build_parser(rules)
-                parsers[rules] = p
             return bool(p.can_fetch(user_agent, u))
 
         from urllib.parse import urljoin
@@ -214,10 +193,8 @@ def make_step_udf(robots_map: dict[str, str] | None, user_agent: str,
             cols["pl_canon"].append(pl_canon)
             cols["pl_host"].append(pl_host)
 
-        for u, h, fu, htm, st, rl in zip(
-            url, host, final_url, html, eff_status, rules_col
-        ):
-            ok = allowed_by_rules(u, rl) if rules_from_col else allowed(u, h)
+        for u, h, fu, htm, st in zip(url, host, final_url, html, eff_status):
+            ok = allowed(u, h)
             if not ok or st != 200 or not isinstance(htm, str):
                 emit(False, {}, [], [], [], [], "", "", "", ok, [], [], [], [])
                 continue
@@ -237,7 +214,7 @@ def make_step_udf(robots_map: dict[str, str] | None, user_agent: str,
                 if not canon:
                     continue
                 lh = get_host(canon)
-                if not rules_from_col and not allowed(canon, lh):
+                if not allowed(canon, lh):
                     continue
                 pl_pos.append(min(pos, _SEQ_POS_MAX))
                 pl_abs.append(urljoin(fu, href.strip()))
@@ -268,10 +245,6 @@ class CrawlState:
     # frontier / resumed run).  When 0, the next superstep's entire
     # admission+fetch job is provably empty and is skipped.
     pending_count: int | None = None
-    # table-mode politeness (J5): the worst (largest) per-host delay,
-    # observed as a SCALAR on the host-state merge job — drives the
-    # admission fast path without ever collecting per-host rows
-    max_delay_seen: float = 0.0
     # BFS level (O2): min depth over pending rows, observed on the
     # SAME merge job as pending_count — the level filter then needs
     # no per-superstep min(depth) collect.  None = unknown (resumed
@@ -296,11 +269,6 @@ class CrawlResultTables:
     docs: DataFrame
     crawl_log: DataFrame
     state: CrawlState
-    # table-mode politeness (J5): the distributed (host, delay, fails)
-    # dim; None in dict mode.  state.host_state is materialized from
-    # it ONCE at run end (reporting/parity surface only — the loop
-    # itself never collects host rows in table mode).
-    host_state_df: DataFrame | None = None
 
 
 class CrawlEngine:
@@ -325,8 +293,6 @@ class CrawlEngine:
         pace_fetch: bool = False,
         page_cache: DataFrame | None = None,
         cache_mode=None,
-        robots_as_table: bool = False,
-        host_state_as_table: bool = False,
         link_score_fn=None,
     ) -> None:
         self.spark = spark
@@ -351,8 +317,7 @@ class CrawlEngine:
                 # P1 variant b: wall-clock same-host spacing INSIDE the
                 # fetch UDF (reference RateLimiter.wait_if_needed,
                 # async_dispatcher.py:45-63) — the UDF takes the
-                # per-host delay column; in host-state table mode that
-                # is the live backoff/decay delay, else base_delay.
+                # per-host delay column: the live backoff/decay delay.
                 from crawl4ai_spark.sources.fetch import make_paced_fetch_udf
 
                 self._fetch_udf = make_paced_fetch_udf(
@@ -395,38 +360,17 @@ class CrawlEngine:
         self.checkpoint_every = checkpoint_every
         self.verbose_timing = verbose_timing
         self.capture_plans = capture_plans
-        # J4 robots gate: closure mode collects the (host → rules) dim
-        # into the UDF (fine while robots is broadcast-small); table
-        # mode (robots_as_table=True, the 10^8-host scale path) NEVER
-        # collects — rules reach the fetch gate as a joined column and
-        # links are gated by a dim join + vectorized can_fetch.
-        self.robots_as_table = bool(robots_as_table)
-        self._robots_dim = None
-        self._link_robots_udf = None
+        # J4 robots gate: the (host → rules) dim is collected into the
+        # fused UDF's closure
         robots_map = None
         if cfg.respect_robots and robots is not None:
-            if self.robots_as_table:
-                from crawl4ai_spark.sources.robots import make_can_fetch_udf
-
-                self._robots_dim = robots.select("host", "rules")
-                self._link_robots_udf = make_can_fetch_udf(cfg.user_agent)
-            else:
-                robots_map = {
-                    r["host"]: r["rules"]
-                    for r in robots.select("host", "rules").collect()
-                }
+            robots_map = {
+                r["host"]: r["rules"]
+                for r in robots.select("host", "rules").collect()
+            }
         self._step_udf = make_step_udf(
-            robots_map, cfg.user_agent,
-            rules_from_col=self._robots_dim is not None,
-            markdown_dialect=cfg.markdown_dialect,
+            robots_map, cfg.user_agent, markdown_dialect=cfg.markdown_dialect,
         )
-        # J5 politeness state: table mode keeps (host, delay, fails) as
-        # a distributed dim MERGE'd per superstep from the same outcome
-        # agg the dict path collects — no per-superstep driver collect.
-        self.host_state_as_table = bool(host_state_as_table)
-        self._host_df: DataFrame | None = None
-        if self.host_state_as_table and cfg.track_host_state:
-            self._host_df = self._empty("host string, delay double, fails int")
         self.link_score_fn = link_score_fn
         if cfg.mode == "best_first":
             # reference min-heap: lower score first, FIFO tiebreak
@@ -498,7 +442,6 @@ class CrawlEngine:
                     F.lit("https://warm.invalid/x"), F.lit("warm.invalid"),
                     F.lit("https://warm.invalid/x"),
                     F.lit(None).cast("string"), F.lit(0),
-                    F.lit(None).cast("string"),
                 ).alias("ex")
             )
         )
@@ -573,13 +516,7 @@ class CrawlEngine:
             pages_crawled=st["pages_crawled"],
             host_state={h: (d, f) for h, (d, f) in st["host_state"].items()},
             frontier_ub=st.get("frontier_ub", _SMALL_PENDING_MAX + 1),
-            max_delay_seen=st.get("max_delay_seen", 0.0),
         )
-        if self._host_df is not None:
-            try:
-                self._host_df = self.store.load(self.spark, "host_state")
-            except Exception:
-                pass  # resuming a dict-mode snapshot: start empty
         frontier = self.store.load(self.spark, "frontier")
         docs = self.store.load(self.spark, "docs")
         log = self.store.load(self.spark, "crawl_log")
@@ -616,13 +553,6 @@ class CrawlEngine:
         return self._result(frontier, docs, log, state)
 
     def _result(self, frontier, docs, log, state) -> CrawlResultTables:
-        if self._host_df is not None:
-            # one collect at RUN END only (reporting/parity surface —
-            # the loop itself never ships host rows to the driver)
-            state.host_state = {
-                r["host"]: (r["delay"], r["fails"])
-                for r in self._host_df.collect()
-            }
         return CrawlResultTables(
             frontier=frontier.filter(F.col("status") != "trimmed"),
             seen=frontier.select(
@@ -631,24 +561,17 @@ class CrawlEngine:
             docs=docs,
             crawl_log=log,
             state=state,
-            host_state_df=self._host_df,
         )
 
     def _commit(self, frontier, docs, log, state) -> None:
-        tables = {"frontier": frontier, "docs": docs, "crawl_log": log}
-        if self._host_df is not None:
-            # table-mode politeness state checkpoints as a TABLE (the
-            # manifest dict stays empty — host rows never leave Spark)
-            tables["host_state"] = self._host_df
         self.store.commit(
             snapshot_id=state.iteration,
-            tables=tables,
+            tables={"frontier": frontier, "docs": docs, "crawl_log": log},
             metrics={"pages_crawled": state.pages_crawled,
                      "frontier_size": frontier.count()},
             state={"iteration": state.iteration, "next_seq": state.next_seq,
                    "pages_crawled": state.pages_crawled,
                    "frontier_ub": state.frontier_ub,
-                   "max_delay_seen": state.max_delay_seen,
                    "host_state": {h: list(v) for h, v in state.host_state.items()}},
         )
 
@@ -691,12 +614,7 @@ class CrawlEngine:
 
         # ── job 1: politeness admission window (P1): per-host budget
         #    rank (keyed window), then exact PARALLEL global top-K ────
-        table_mode = self._host_df is not None
-        budgets = (
-            []
-            if table_mode
-            else [(h, cfg.host_budget(d)) for h, (d, _f) in state.host_state.items()]
-        )
+        budgets = [(h, cfg.host_budget(d)) for h, (d, _f) in state.host_state.items()]
         remaining = cfg.max_pages - state.pages_crawled
         global_budget = min(cfg.global_budget, remaining)
 
@@ -704,12 +622,7 @@ class CrawlEngine:
         # per-host cap provably cannot change the admitted set (any row
         # ranked past its host cap is also past the global cut) — skip
         # the extra shuffle+window.  This is the throughput-bench mode.
-        # Table mode derives the same bound from the SCALAR worst-delay
-        # observed on the host-state merge (never collects host rows).
-        if table_mode:
-            min_budget = cfg.host_budget(max(state.max_delay_seen, cfg.base_delay))
-        else:
-            min_budget = min([b for _h, b in budgets], default=cfg.base_budget)
+        min_budget = min([b for _h, b in budgets], default=cfg.base_budget)
         cap_can_bind = min(min_budget, cfg.base_budget) < global_budget
         cands = pending
         # O5 fairness aging: starved entries jump the queue with
@@ -724,25 +637,7 @@ class CrawlEngine:
             cands = cands.withColumn("_fair", fair)
             order = [F.asc("_fair")] + order
         if cap_can_bind:
-            if table_mode:
-                # budget = max(1, int(base_budget·base_delay / delay))
-                # — the exact Column form of cfg.host_budget (double
-                # division + floor ≡ CPython int() for positive args).
-                # The dim is per-host-small; left join keyed on host
-                # (Catalyst/AQE broadcasts it while it fits, falls back
-                # to a shuffle join at 10^8 hosts).
-                bdf = self._host_df.select(
-                    "host",
-                    F.greatest(
-                        F.lit(1),
-                        F.floor(
-                            F.lit(float(cfg.base_budget * cfg.base_delay))
-                            / F.col("delay")
-                        ).cast("int"),
-                    ).alias("budget"),
-                )
-                cands = cands.join(bdf, "host", "left")
-            elif budgets:
+            if budgets:
                 bdf = spark.createDataFrame(budgets, "host string, budget int")
                 cands = cands.join(F.broadcast(bdf), "host", "left")
             else:
@@ -830,11 +725,6 @@ class CrawlEngine:
 
         read_cache = self.page_cache is not None and should_read(self.cache_mode)
         write_cache = self.page_cache is not None and should_write(self.cache_mode)
-        if self._robots_dim is not None:
-            # J4 table mode: the page's robots rules arrive as a joined
-            # column (host-keyed dim join — Catalyst broadcasts while
-            # small, shuffles at 10^8 hosts); no driver collect.
-            batch = batch.join(self._robots_dim, "host", "left")
         batch_cols = list(batch.columns)
         fetch_in = cache_lookup(batch, self.page_cache) if read_cache else batch
         hit = F.col("cache_hit") if read_cache else F.lit(False)
@@ -857,19 +747,18 @@ class CrawlEngine:
                 F.pmod(F.coalesce("url_hash", F.lit(0)), F.lit(4 * n_parts)),
             )
             if self._pace_fetch:
-                # per-host delay: live host-state dim in table mode
-                # (host, delay, fails) else the configured base delay;
-                # the paced UDF sleeps same-host requests ≥ delay apart
-                if self._host_df is not None:
-                    fetch_in = fetch_in.join(
-                        F.broadcast(self._host_df.select("host", F.col("delay").alias("_pace_delay"))),
-                        "host", "left",
+                # per-host delay: the live backoff/decay delay from
+                # state.host_state (the rows the admission budgets come
+                # from), base_delay for hosts not in it; the paced UDF
+                # sleeps same-host requests ≥ delay apart
+                delay_col = F.lit(float(cfg.base_delay))
+                if state.host_state:
+                    delays = spark.createDataFrame(
+                        [(h, float(d)) for h, (d, _f) in state.host_state.items()],
+                        "host string, _pace_delay double",
                     )
-                    delay_col = F.coalesce(
-                        F.col("_pace_delay"), F.lit(float(self.cfg.base_delay))
-                    )
-                else:
-                    delay_col = F.lit(float(self.cfg.base_delay))
+                    fetch_in = fetch_in.join(F.broadcast(delays), "host", "left")
+                    delay_col = F.coalesce(F.col("_pace_delay"), delay_col)
                 fetched = fetch_in.withColumn(
                     "_fr", self._fetch_udf(F.when(~hit, F.col("url")), delay_col)
                 )
@@ -921,16 +810,11 @@ class CrawlEngine:
                 fetched.select("url", "final_url", "eff_status", "eff_html"),
                 iteration,
             ).localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
-        rules_col = (
-            F.col("rules") if self._robots_dim is not None
-            else F.lit(None).cast("string")
-        )
         step = fetched.select(
-            *[F.col(c) for c in batch.columns if c != "rules"],
-            "eff_status", "final_url",
+            *batch_cols, "eff_status", "final_url",
             self._step_udf(
                 F.col("url"), F.col("host"), F.col("final_url"),
-                F.col("eff_html"), F.col("eff_status"), rules_col,
+                F.col("eff_html"), F.col("eff_status"),
             ).alias("ex"),
         )
         backoff = F.col("eff_status").isin(list(BACKOFF_CODES))
@@ -945,11 +829,10 @@ class CrawlEngine:
         if self.capture_plans:
             self.last_plans["step"] = step._jdf.queryExecution().executedPlan().toString()
         obs = None
-        if not cfg.track_host_state or table_mode:
-            # throughput mode AND table mode: superstep counters ride
-            # the checkpoint job as observe() metrics — no separate
-            # per-host aggregation COLLECT (table mode still aggregates
-            # per host below, but distributed, merged into the dim)
+        if not cfg.track_host_state:
+            # throughput mode: superstep counters ride the checkpoint
+            # job as observe() metrics — no separate per-host
+            # aggregation COLLECT
             from pyspark.sql import Observation
 
             obs = Observation(f"step_{iteration}")
@@ -992,67 +875,6 @@ class CrawlEngine:
                     state.host_state[r["host"]] = (min(cfg.max_delay, delay * cfg.backoff_factor), fails + 1)
                 elif r["ok"] > 0:
                     state.host_state[r["host"]] = (max(cfg.base_delay, delay * cfg.decay_factor), 0)
-        if table_mode:
-            # J5 MERGE: the same per-host outcome agg, kept distributed
-            # and full-outer-merged into the (host, delay, fails) dim —
-            # the Column rules below are the exact dict-path update
-            # (backoff ×factor capped at max_delay on any 429/503;
-            # decay ×factor floored at base_delay on success; untouched
-            # hosts keep state; a host enters the dim only once it has
-            # an ok or bad outcome, mirroring the dict/simulator).  The
-            # worst delay rides the checkpoint as an observe() scalar
-            # for the admission fast path — NO host rows ever reach the
-            # driver inside the loop.
-            from pyspark.sql import Observation
-
-            delta = step.groupBy("host").agg(
-                F.sum(F.when(F.col("outcome") == "success", 1).otherwise(0)).alias("d_ok"),
-                F.sum(
-                    F.when(F.col("outcome").isin("retry", "gave_up"), 1).otherwise(0)
-                ).alias("d_bad"),
-            )
-            merged = (
-                self._host_df.join(delta, "host", "full_outer")
-                .withColumn("d_ok", F.coalesce("d_ok", F.lit(0)))
-                .withColumn("d_bad", F.coalesce("d_bad", F.lit(0)))
-                .withColumn("_delay", F.coalesce("delay", F.lit(float(cfg.base_delay))))
-                .withColumn("_fails", F.coalesce("fails", F.lit(0)))
-                .filter(
-                    F.col("delay").isNotNull()
-                    | (F.col("d_bad") > 0) | (F.col("d_ok") > 0)
-                )
-                .select(
-                    "host",
-                    F.when(
-                        F.col("d_bad") > 0,
-                        F.least(
-                            F.lit(float(cfg.max_delay)),
-                            F.col("_delay") * F.lit(float(cfg.backoff_factor)),
-                        ),
-                    )
-                    .when(
-                        F.col("d_ok") > 0,
-                        F.greatest(
-                            F.lit(float(cfg.base_delay)),
-                            F.col("_delay") * F.lit(float(cfg.decay_factor)),
-                        ),
-                    )
-                    .otherwise(F.col("_delay"))
-                    .alias("delay"),
-                    F.when(F.col("d_bad") > 0, F.col("_fails") + 1)
-                    .when(F.col("d_ok") > 0, F.lit(0))
-                    .otherwise(F.col("_fails"))
-                    .alias("fails"),
-                )
-            )
-            obs_host = Observation(f"host_{iteration}")
-            merged = merged.observe(obs_host, F.max("delay").alias("max_delay"))
-            self._host_df = merged.coalesce(
-                min(n_parts, 8)
-            ).localCheckpoint(eager=True, storageLevel=self._CKPT_HOT_LEVEL)
-            state.max_delay_seen = float(
-                obs_host.get["max_delay"] or cfg.base_delay
-            )
         _mark("host_agg")
 
         new_docs = step.filter(F.col("outcome") == "success").select(
@@ -1099,17 +921,6 @@ class CrawlEngine:
                 )
                 .filter(valid_crawl_url(F.col("abs_url")))
             )
-            if self._robots_dim is not None:
-                # J4 table mode, link side: dim join on the LINK's host
-                # + vectorized can_fetch — replaces the closure-map
-                # gate inside the step UDF.  Runs BEFORE within-batch
-                # dedup so a blocked duplicate can never shadow an
-                # allowed one (checks are order-independent otherwise).
-                links = (
-                    links.join(self._robots_dim, "host", "left")
-                    .filter(self._link_robots_udf(F.col("rules"), F.col("canon")))
-                    .drop("rules")
-                )
             if cfg.filters:
                 links = links.filter(compile_filters_column(cfg.filters, F.col("abs_url")))
             links = links.withColumn(

@@ -1,22 +1,27 @@
 """Snapshot-versioned parquet state store — the sandbox's Iceberg.
 
-Iceberg isn't on this classpath, so crawl state (frontier / seen /
-docs / host_state / crawl_log) persists as parquet snapshot
-directories plus an atomically-swapped JSON manifest:
+Iceberg isn't on this classpath, so crawl state (frontier / docs /
+crawl_log) persists as parquet snapshot directories plus an
+atomically-swapped JSON manifest:
 
     root/
-      _manifest.json              ← current snapshot id per table + metrics
-      frontier/snap=000042/*.parquet
-      seen/snap=000042/*.parquet
+      _manifest.json              ← current snapshot path per table + metrics
+      frontier/snap=000042-1f0c9a2e/*.parquet
+      docs/snap=000042-1f0c9a2e/*.parquet
       ...
 
 Semantics preserved from the Iceberg design (SURVEY §4.2.4): an
 iteration commits every table under ONE manifest swap (os.replace is
 atomic on POSIX), a reader always sees a consistent snapshot set, and
 resume = read manifest → load those snapshots → continue the loop.
-Old snapshots are pruned lazily.  On a real cluster the same calls
-map 1:1 onto Iceberg MERGE INTO + snapshot ids; the engine only uses
-this narrow interface.
+Every commit writes into fresh directories (snapshot id plus a random
+suffix) that no manifest names yet, so neither a failed write nor a
+re-commit of the current snapshot id — whose tables may be read from
+the very files it replaces — can touch the live snapshot; the
+manifest swap is the only commit point.  Old snapshots are pruned
+lazily, never one the live manifest names.  On a real cluster the
+same calls map 1:1 onto Iceberg MERGE INTO + snapshot ids; the engine
+only uses this narrow interface.
 
 Per-partition lineage (north rule: "resumable runs with
 per-partition lineage and metrics"): each committed table records its
@@ -27,13 +32,14 @@ is appended to `_lineage.jsonl` so the snapshot chain survives data
 pruning (Iceberg's metadata log role).  Footer reads are driver-side
 pyarrow metadata calls — no extra Spark job.
 
-INTEGRATION GATE (verified absent through round 5): no Iceberg
-runtime jar ships in this sandbox's pyspark classpath, so the
-`bucket(url_hash)` storage-partitioned-join claim (plans/crawl.py
-seen-join tier — the no-exchange bucketed mode is plan-asserted
-against Spark's native bucketed tables in tests) remains validated
-against Spark bucketed tables only, not a live Iceberg catalog.  On a
-cluster with `iceberg-spark-runtime` on the classpath, the swap is
+INTEGRATION GATE: no Iceberg runtime jar is on the pyspark classpath
+this package is tested with, so nothing here is validated against a
+live Iceberg catalog.  The engine's seen anti-join (plans/crawl.py)
+broadcasts the frontier's url_hash keys while they are small and
+shuffles both sides on the hash beyond that; a `bucket(url_hash)`
+Iceberg frontier with storage-partitioned joins would let that
+shuffled side skip its exchange, which is untested.  On a cluster
+with `iceberg-spark-runtime` on the classpath, the swap is
 config-only:
 
     spark.sql.catalog.crawl = org.apache.iceberg.spark.SparkCatalog
@@ -51,6 +57,7 @@ import json
 import os
 import shutil
 import time
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,9 +104,10 @@ class SnapshotStore:
             "metrics": metrics or {},
             "state": state or {},
         }
+        tag = uuid.uuid4().hex[:8]
         for name, df in tables.items():
-            path = self._snap_path(name, snapshot_id)
-            df.write.mode("overwrite").parquet(path)
+            path = self._snap_path(name, snapshot_id, tag)
+            df.write.parquet(path)  # a fresh path: never overwrites
             files = self._file_lineage(path)
             entry["tables"][name] = {
                 "path": path,
@@ -122,7 +130,7 @@ class SnapshotStore:
         else:
             with open(lpath, "a") as f:
                 f.write(json.dumps(entry) + "\n")
-        self._prune(snapshot_id)
+        self._prune(entry)
 
     @staticmethod
     def _file_lineage(path: str) -> list[dict[str, Any]]:
@@ -160,16 +168,23 @@ class SnapshotStore:
         path = t["path"] if isinstance(t, dict) else t  # pre-lineage manifests
         return spark.read.parquet(path)
 
-    def _snap_path(self, name: str, snapshot_id: int) -> str:
-        return os.path.join(self.root, name, f"snap={snapshot_id:06d}")
+    def _snap_path(self, name: str, snapshot_id: int, tag: str) -> str:
+        return os.path.join(self.root, name, f"snap={snapshot_id:06d}-{tag}")
 
-    def _prune(self, current: int) -> None:
+    def _prune(self, live: dict[str, Any]) -> None:
+        """Drop snapshot directories whose id is older than the newest
+        `keep_snapshots` ids, except any the live manifest names."""
+        keep = {t["path"] for t in live["tables"].values()}
         for name in os.listdir(self.root):
             tdir = os.path.join(self.root, name)
             if not os.path.isdir(tdir):
                 continue
-            snaps = sorted(d for d in os.listdir(tdir) if d.startswith("snap="))
-            for d in snaps[: -self.keep_snapshots]:
-                sid = int(d.split("=")[1])
-                if sid != current:
-                    shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
+            snaps = {
+                d: int(d.split("=")[1].split("-")[0])
+                for d in os.listdir(tdir) if d.startswith("snap=")
+            }
+            old = set(sorted(set(snaps.values()))[: -self.keep_snapshots])
+            for d, sid in snaps.items():
+                path = os.path.join(tdir, d)
+                if sid in old and path not in keep:
+                    shutil.rmtree(path, ignore_errors=True)

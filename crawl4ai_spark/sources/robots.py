@@ -3,18 +3,14 @@
 Parsing/matching delegates to stdlib urllib.robotparser — the public,
 deterministic semantics (longest-match is NOT applied; stdlib uses
 first-match per ruleline ordering, which is also what the reference's
-cached parser exposes through can_fetch, utils.py:312-364).  One
-parser is built per distinct rules text per batch (hosts ≪ URLs), then
-vectorized over the URL batch.
+cached parser exposes through can_fetch, utils.py:312-364).  The
+crawl engine's fused step UDF builds one parser per host from the
+collected rules map (hosts ≪ URLs) and reuses it for the batch.
 """
 
 from __future__ import annotations
 
 from urllib import robotparser
-
-import pandas as pd
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import BooleanType
 
 
 def build_parser(rules: str | None) -> robotparser.RobotFileParser:
@@ -30,24 +26,3 @@ def can_fetch(rules: str | None, user_agent: str, url: str) -> bool:
         return True
     return build_parser(rules).can_fetch(user_agent, url)
 
-
-def make_can_fetch_udf(user_agent: str):
-    """Vectorized (rules, url) → bool with per-batch parser memoization
-    keyed by rules text."""
-
-    @pandas_udf(BooleanType())
-    def robots_can_fetch_udf(rules: pd.Series, url: pd.Series) -> pd.Series:
-        cache: dict[str, robotparser.RobotFileParser] = {}
-        out = []
-        for r, u in zip(rules, url):
-            if r is None or not r.strip():
-                out.append(True)
-                continue
-            p = cache.get(r)
-            if p is None:
-                p = build_parser(r)
-                cache[r] = p
-            out.append(bool(p.can_fetch(user_agent, u)))
-        return pd.Series(out, dtype=bool)
-
-    return robots_can_fetch_udf

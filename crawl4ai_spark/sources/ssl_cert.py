@@ -19,8 +19,8 @@ the (host, der) table via one Arrow UDF batch (`parse_certs`), then
 broadcast-join cert columns (expiry, issuer, SANs) wherever policy
 needs them — e.g. joining `not_after` onto the frontier to deprioritize
 soon-expiring hosts, or SAN/host mismatch as a quality signal.  At
-10^8 hosts the dim is ~GBs: same scale class as the robots dim (J4
-table mode), and it shuffles the same way.
+10^8 hosts the dim is ~GBs and the join shuffles instead of
+broadcasting.
 """
 
 from __future__ import annotations

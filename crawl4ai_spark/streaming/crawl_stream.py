@@ -226,7 +226,6 @@ class StreamingCrawl:
             self._step_udf(
                 F.col("url"), F.col("host"), F.col("url"),
                 F.col("eff_html"), F.col("eff_status"),
-                F.lit(None).cast("string"),
             ).alias("ex"),
         ).localCheckpoint(eager=True)
 

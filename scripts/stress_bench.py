@@ -142,7 +142,7 @@ def run_tier(spark, port: int, n_urls: int, max_sessions: int,
         F.col("f.status_code").alias("status"),
         step(
             F.col("url"), F.lit("127.0.0.1"), F.coalesce("f.final_url", "url"),
-            F.col("f.html"), F.col("f.status_code"), F.lit(None).cast("string"),
+            F.col("f.html"), F.col("f.status_code"),
         ).alias("ex"),
     )
 

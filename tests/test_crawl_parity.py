@@ -36,13 +36,13 @@ SCORER = {
 }
 
 
-def _build_inputs(spark):
-    pdf = synthetic_pages_pdf(WEB)
+def _build_inputs(spark, web=WEB):
+    pdf = synthetic_pages_pdf(web)
     pages = {r["url"]: r for r in pdf.to_dict("records")}
-    robots = {r["host"]: r["rules"] for r in robots_rows(WEB)}
-    seeds = seed_urls(WEB, n_seeds=6)
+    robots = {r["host"]: r["rules"] for r in robots_rows(web)}
+    seeds = seed_urls(web, n_seeds=6)
     pages_df = spark.createDataFrame(pdf).cache()
-    robots_df = spark.createDataFrame(robots_rows(WEB))
+    robots_df = spark.createDataFrame(robots_rows(web))
     return pages, robots, seeds, pages_df, robots_df
 
 
@@ -302,61 +302,21 @@ def test_salted_admission_parity(spark):
     _assert_parity(sim2, eng2)
 
 
-def test_host_state_table_parity(spark):
-    """J5 scale path: politeness state as a distributed (host, delay,
-    fails) dim MERGE'd per superstep must reproduce the dict path's
-    crawl EXACTLY — order, seen set, spans, and the full host-state
-    trajectory (_assert_parity #4 compares the end-of-run materialized
-    dim against the simulator's dict)."""
-    cfg = CrawlConfig(
-        mode="best_first", max_depth=4, max_pages=50, scorer=SCORER,
-        score_threshold=0.05, base_budget=3, global_budget=10, max_iterations=40,
-    )
-    pages, robots, seeds, pages_df, robots_df = _build_inputs(spark)
+def test_engine_rerun_parity(spark):
+    """One engine, two crawls: run() must start each crawl from fresh
+    politeness state.  The config ends with hosts backed off, so any
+    host state leaking into the second run would change its admission
+    budgets and with them the crawl."""
+    web = WebConfig(n_pages=160, n_hosts=6, seed=42, fault_every=5)
+    cfg = CrawlConfig(mode="best_first", max_depth=256, base_budget=3,
+                      global_budget=10, max_delay=4.0, max_retries=1,
+                      max_iterations=4)
+    pages, robots, seeds, pages_df, robots_df = _build_inputs(spark, web)
     sim = simulate_crawl(pages, robots, seeds, cfg)
-    eng_obj = CrawlEngine(spark, cfg, pages_df, robots_df, host_state_as_table=True)
-    eng = eng_obj.run(seeds)
-    _assert_parity(sim, eng)
-    assert eng.host_state_df is not None
-    # the dim itself matches the simulator row-for-row
-    dim = {r["host"]: (round(r["delay"], 9), r["fails"])
-           for r in eng.host_state_df.collect()}
-    exp = {h: (round(d, 9), f) for h, (d, f) in sim.host_state.items()}
-    assert dim == exp
-
-
-def test_robots_table_parity(spark):
-    """J4 scale path: robots rules delivered by dim JOIN (fetch gate:
-    joined rules column into the step UDF; link gate: dim join +
-    vectorized can_fetch) must equal the closure-map path — and the
-    engine must never collect robots rows."""
-    cfg = CrawlConfig(mode="bfs", max_depth=3, max_pages=80,
-                      base_budget=4, global_budget=24, max_iterations=40)
-    pages, robots, seeds, pages_df, robots_df = _build_inputs(spark)
-    sim = simulate_crawl(pages, robots, seeds, cfg)
-    eng_obj = CrawlEngine(spark, cfg, pages_df, robots_df, robots_as_table=True)
-    eng = eng_obj.run(seeds)
-    _assert_parity(sim, eng)
-    blocked_host = WEB.host_name(WEB.n_hosts - 1)
-    fetched = [r["url"] for r in eng.crawl_log.filter(F.col("outcome") == "success").collect()]
-    assert not any(f"//{WEB.host_name(0)}/private/" in u for u in fetched)
-    assert not any(blocked_host in u for u in fetched)
-
-
-def test_both_tables_parity(spark):
-    """The full at-scale configuration — robots dim join + host-state
-    dim together — still matches the simulator."""
-    cfg = CrawlConfig(
-        mode="best_first", max_depth=4, max_pages=50, scorer=SCORER,
-        score_threshold=0.05, base_budget=3, global_budget=10, max_iterations=40,
-    )
-    pages, robots, seeds, pages_df, robots_df = _build_inputs(spark)
-    sim = simulate_crawl(pages, robots, seeds, cfg)
-    eng = CrawlEngine(
-        spark, cfg, pages_df, robots_df,
-        robots_as_table=True, host_state_as_table=True,
-    ).run(seeds)
-    _assert_parity(sim, eng)
+    assert {(4.0, 2), (3.0, 0)} <= set(sim.host_state.values())
+    engine = CrawlEngine(spark, cfg, pages_df, robots_df)
+    _assert_parity(sim, engine.run(seeds))
+    _assert_parity(sim, engine.run(seeds))
 
 
 @pytest.mark.parametrize(

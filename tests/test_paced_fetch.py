@@ -112,7 +112,6 @@ def test_engine_paced_parity(spark):
             transport_factory=functools.partial(SyntheticTransport, corpus),
             transport_cache_key=f"parity-{paced}-{time.time()}",
             pace_fetch=paced,
-            host_state_as_table=paced,  # exercise the delay-dim join
         )
         res = eng.run(seed_urls(web, 5))
         log = [

@@ -5,6 +5,9 @@ snapshot store with atomic manifest swap)."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.sql import functions as F
+
 from crawl4ai_spark.plans.config import CrawlConfig
 from crawl4ai_spark.plans.crawl import CrawlEngine
 from crawl4ai_spark.plans.state import SnapshotStore
@@ -92,3 +95,41 @@ def test_manifest_atomicity(spark, tmp_path):
     for prev, cur in zip(lin, lin[1:]):
         assert cur["parent_snapshot_id"] == prev["snapshot_id"]
     assert lin[-1]["snapshot_id"] == m["snapshot_id"]
+
+
+def test_resume_of_finished_crawl_keeps_snapshot(spark, tmp_path):
+    """Resuming a finished crawl runs no superstep and re-commits the
+    current snapshot id from tables read out of that very snapshot.
+    The re-commit must not read files it has deleted, and must leave a
+    snapshot that loads with the manifest's row counts."""
+    pages, robots, seeds = _inputs(spark)
+    store = SnapshotStore(str(tmp_path / "store3"))
+    full = CrawlEngine(spark, _cfg(30), pages, robots, store=store).run(seeds)
+    resumed = CrawlEngine(
+        spark, _cfg(full.state.iteration), pages, robots, store=store
+    ).resume()
+    assert resumed.state.pages_crawled == full.state.pages_crawled
+    assert resumed.docs.count() == full.docs.count()
+    m = store.read_manifest()
+    assert m["snapshot_id"] == full.state.iteration
+    for name, t in m["tables"].items():
+        assert t["rows"] > 0, name
+        assert store.load(spark, name).count() == t["rows"], name
+
+
+def test_failed_recommit_keeps_live_snapshot(spark, tmp_path):
+    """A re-commit of the current snapshot id whose table write fails
+    mid-job leaves the previous snapshot live and loadable."""
+    store = SnapshotStore(str(tmp_path / "store4"))
+    df = spark.range(50).withColumnRenamed("id", "n")
+    store.commit(snapshot_id=1, tables={"t": df})
+
+    @F.udf("long")
+    def boom(n):
+        raise RuntimeError("write failed")
+
+    with pytest.raises(Exception, match="write failed"):
+        store.commit(snapshot_id=1, tables={"t": df.select(boom("n").alias("n"))})
+    m = store.read_manifest()
+    assert m["snapshot_id"] == 1 and m["tables"]["t"]["rows"] == 50
+    assert store.load(spark, "t").count() == 50
