@@ -60,8 +60,8 @@ class CrawlConfig:
     # maintained (legitimate ONLY when budgets provably never bind —
     # host_budget shrinks at most ×(max_delay/base_delay), so
     # base_budget ≥ global_budget·max_delay/base_delay guarantees it).
-    # The engine then reads its superstep counters from observe()
-    # metrics instead of a per-host aggregation job.
+    # Either way the host outcomes are observed on the step checkpoint;
+    # False only skips the driver-side dict update.
     track_host_state: bool = True
     # Hot-host skew defense on the politeness admission window.  A
     # single Window.partitionBy(host) puts ALL of a host's pending

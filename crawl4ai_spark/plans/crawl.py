@@ -1,21 +1,20 @@
 """The distributed crawl loop: level-synchronous supersteps over
 snapshot-versioned state tables.
 
-Each superstep is FOUR Spark jobs (down from ~8 in round 1 — the
-per-superstep driver-job floor was the measured scaling bottleneck):
+Each superstep is 6-7 Spark jobs (statusTracker counts on the
+perfbench workloads), plus one parquet write per table per commit:
 
-    job 1  batch      admission: per-host politeness cap (keyed
-                      window) + exact parallel global top-K
-                      (plans.rank — no single-task stage)
-    job 2  step       fetch join (corpus never shuffles) → ONE fused
-                      Arrow UDF (robots gate + extraction + per-link
-                      canonicalize/robots prep) → outcome
-    job 3  (collect)  per-host outcome counts + link upper bound —
-                      a tiny agg on the cached step
-    job 4  frontier   candidate explode → native filter/score →
-                      hash-keyed dedup + anti-join (8-byte keys,
-                      broadcast or shuffled by frontier size) →
-                      trim/seq (arithmetic, windowless) → merge
+    2-3  step      admission (per-host cap: keyed window over a literal
+                   budget map, only when a budget can bind; exact
+                   parallel global top-K, plans.rank) as AQE query
+                   stages, then the step checkpoint: fetch join (corpus
+                   never shuffles) → ONE fused Arrow UDF (robots gate +
+                   extraction + link prep) → outcome; counters and the
+                   ok / backed-off host sets are observed on it
+    4    frontier  candidate explode → filter/score → hash-keyed dedup
+                   + seen anti-join (8-byte keys, broadcast or shuffled
+                   by frontier size) + batch removal → trim/seq
+                   (arithmetic, windowless) → merge checkpoint
 
 State design: ONE frontier table subsumes the URL-seen set — every
 discovered URL keeps a row forever (status pending/done/failed/
@@ -42,8 +41,9 @@ Scale notes (10^10 frontier, 1000 executors):
 - per-superstep shuffle of the frontier is O(n) 8-byte hashes (the
   seen anti-join's frontier side, once past the broadcast shortcut);
 - host backoff state and robots rules live driver-side (a dict
-  updated from the per-host outcome collect, and the rules map in the
-  fused UDF's closure), so both are bounded by driver memory;
+  updated from the host sets observed on the step checkpoint, and the
+  rules map in the fused UDF's closure), so both are bounded by driver
+  memory;
 - the fused UDF means one Python worker per task, and the explicit
   repartition before it pins the stage width to the configured
   parallelism (AQE's advisory-size coalescing would otherwise shrink
@@ -60,12 +60,13 @@ async_webcrawler.py:318-331.
 
 from __future__ import annotations
 
+import json
 import time
 from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.storagelevel import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
@@ -133,6 +134,16 @@ def spans_struct(ex) -> "F.Column":
         ex["span_refs"].alias("media_ref"),
         ex["span_offsets"].alias("offset"),
     )
+
+
+def _host_lookup(values: dict[str, object], default, value_type: str) -> "F.Column":
+    """`values[host]`, else `default`: a literal map in the plan, no
+    join and no job.  One JSON literal, folded into the map by the
+    optimizer (an F.lit per entry costs ~1.7 ms/host of py4j calls)."""
+    if not values:
+        return F.lit(default).cast(value_type)
+    lookup = F.from_json(F.lit(json.dumps(values)), f"map<string,{value_type}>")
+    return F.coalesce(F.element_at(lookup, F.col("host")), F.lit(default).cast(value_type))
 
 
 def make_step_udf(robots_map: dict[str, str] | None, user_agent: str,
@@ -528,6 +539,7 @@ class CrawlEngine:
         # accumulate per-iteration parts, union at commit/return time.
         docs_parts: list[DataFrame] = []
         log_parts: list[DataFrame] = []
+        committed = None  # iteration of the last in-loop commit
         while state.iteration < cfg.max_iterations and state.pages_crawled < cfg.max_pages:
             out = self._iterate(frontier, state)
             if out is None:
@@ -546,9 +558,12 @@ class CrawlEngine:
                 log = self._union_parts(log, log_parts).localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
                 docs_parts, log_parts = [], []
                 self._commit(frontier, docs, log, state)
+                committed = state.iteration
         docs = self._union_parts(docs, docs_parts)
         log = self._union_parts(log, log_parts)
-        if self.store:
+        # commit what the loop has not: a crawl that stopped between
+        # checkpoints, or one that ran no superstep at all
+        if self.store and committed != state.iteration:
             self._commit(frontier, docs, log, state)
         return self._result(frontier, docs, log, state)
 
@@ -566,9 +581,11 @@ class CrawlEngine:
     def _commit(self, frontier, docs, log, state) -> None:
         self.store.commit(
             snapshot_id=state.iteration,
-            tables={"frontier": frontier, "docs": docs, "crawl_log": log},
-            metrics={"pages_crawled": state.pages_crawled,
-                     "frontier_size": frontier.count()},
+            # docs and log are unions of per-superstep parts: coalesce
+            # so each commit writes n_parts files, not one per part
+            tables={"frontier": frontier, "docs": docs.coalesce(self._n_parts),
+                    "crawl_log": log.coalesce(self._n_parts)},
+            metrics={"pages_crawled": state.pages_crawled},
             state={"iteration": state.iteration, "next_seq": state.next_seq,
                    "pages_crawled": state.pages_crawled,
                    "frontier_ub": state.frontier_ub,
@@ -614,7 +631,7 @@ class CrawlEngine:
 
         # ── job 1: politeness admission window (P1): per-host budget
         #    rank (keyed window), then exact PARALLEL global top-K ────
-        budgets = [(h, cfg.host_budget(d)) for h, (d, _f) in state.host_state.items()]
+        budgets = {h: cfg.host_budget(d) for h, (d, _f) in state.host_state.items()}
         remaining = cfg.max_pages - state.pages_crawled
         global_budget = min(cfg.global_budget, remaining)
 
@@ -622,7 +639,7 @@ class CrawlEngine:
         # per-host cap provably cannot change the admitted set (any row
         # ranked past its host cap is also past the global cut) — skip
         # the extra shuffle+window.  This is the throughput-bench mode.
-        min_budget = min([b for _h, b in budgets], default=cfg.base_budget)
+        min_budget = min(budgets.values(), default=cfg.base_budget)
         cap_can_bind = min(min_budget, cfg.base_budget) < global_budget
         cands = pending
         # O5 fairness aging: starved entries jump the queue with
@@ -637,12 +654,9 @@ class CrawlEngine:
             cands = cands.withColumn("_fair", fair)
             order = [F.asc("_fair")] + order
         if cap_can_bind:
-            if budgets:
-                bdf = spark.createDataFrame(budgets, "host string, budget int")
-                cands = cands.join(F.broadcast(bdf), "host", "left")
-            else:
-                cands = cands.withColumn("budget", F.lit(None).cast("int"))
-            cands = cands.withColumn("budget", F.coalesce("budget", F.lit(cfg.base_budget)))
+            cands = cands.withColumn(
+                "budget", _host_lookup(budgets, cfg.base_budget, "int")
+            )
             if cfg.admission_salts and cfg.admission_salts > 1:
                 # Hot-host salting (north rule: "salts hot hosts to
                 # defuse skew").  Exact two-phase cap: pre-trim within
@@ -751,14 +765,10 @@ class CrawlEngine:
                 # state.host_state (the rows the admission budgets come
                 # from), base_delay for hosts not in it; the paced UDF
                 # sleeps same-host requests ≥ delay apart
-                delay_col = F.lit(float(cfg.base_delay))
-                if state.host_state:
-                    delays = spark.createDataFrame(
-                        [(h, float(d)) for h, (d, _f) in state.host_state.items()],
-                        "host string, _pace_delay double",
-                    )
-                    fetch_in = fetch_in.join(F.broadcast(delays), "host", "left")
-                    delay_col = F.coalesce(F.col("_pace_delay"), delay_col)
+                delay_col = _host_lookup(
+                    {h: float(d) for h, (d, _f) in state.host_state.items()},
+                    float(cfg.base_delay), "double",
+                )
                 fetched = fetch_in.withColumn(
                     "_fr", self._fetch_udf(F.when(~hit, F.col("url")), delay_col)
                 )
@@ -828,53 +838,41 @@ class CrawlEngine:
         )
         if self.capture_plans:
             self.last_plans["step"] = step._jdf.queryExecution().executedPlan().toString()
-        obs = None
-        if not cfg.track_host_state:
-            # throughput mode: superstep counters ride the checkpoint
-            # job as observe() metrics — no separate per-host
-            # aggregation COLLECT
-            from pyspark.sql import Observation
-
-            obs = Observation(f"step_{iteration}")
-            step = step.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("outcome") == "success", 1).otherwise(0)).alias("ok"),
-                F.sum(F.coalesce(F.size("ex.pl_pos"), F.lit(0))).alias("n_links"),
-            )
+        # counters and the succeeded / backed-off host sets (at most
+        # the batch's distinct hosts) ride the checkpoint job: no job
+        obs = Observation(f"step_{iteration}")
+        step = step.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("outcome") == "success", 1).otherwise(0)).alias("ok"),
+            F.sum(F.coalesce(F.size("ex.pl_pos"), F.lit(0))).alias("n_links"),
+            F.collect_set(F.when(F.col("outcome") == "success", F.col("host"))).alias("ok_hosts"),
+            F.collect_set(
+                F.when(F.col("outcome").isin("retry", "gave_up"), F.col("host"))
+            ).alias("bad_hosts"),
+        )
         step = step.localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
         _mark("fetch_extract")
 
-        # ── job 3: counters + host-state deltas (A4) + link bound ────
-        if obs is not None:
-            m = obs.get
-            if m["n"] == 0:  # empty batch — frontier exhausted
-                state.iteration = iteration - 1
-                return None
-            n_batch = int(m["n"] or 0)
-            n_success = int(m["ok"] or 0)
-            n_links_ub = int(m["n_links"] or 0)
-            state.pages_crawled += n_success
-        else:
-            agg = step.groupBy("host").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.when(F.col("outcome") == "success", 1).otherwise(0)).alias("ok"),
-                F.sum(F.when(F.col("outcome").isin("retry", "gave_up"), 1).otherwise(0)).alias("bad"),
-                F.sum(F.coalesce(F.size("ex.pl_pos"), F.lit(0))).alias("n_links"),
-            ).collect()
-            if not agg:  # empty batch — frontier exhausted
-                state.iteration = iteration - 1
-                return None
-            n_batch = sum(r["n"] for r in agg)
-            n_success = sum(r["ok"] for r in agg)
-            n_links_ub = sum(r["n_links"] for r in agg)
-            state.pages_crawled += int(n_success)
-            for r in agg:
-                delay, fails = state.host_state.get(r["host"], (cfg.base_delay, 0))
-                if r["bad"] > 0:
-                    state.host_state[r["host"]] = (min(cfg.max_delay, delay * cfg.backoff_factor), fails + 1)
-                elif r["ok"] > 0:
-                    state.host_state[r["host"]] = (max(cfg.base_delay, delay * cfg.decay_factor), 0)
+        # ── counters + host-state deltas (A4) + link bound ───────────
+        m = obs.get
+        if m["n"] == 0:  # empty batch — frontier exhausted
+            state.iteration = iteration - 1
+            return None
+        n_batch = int(m["n"] or 0)
+        n_success = int(m["ok"] or 0)
+        n_links_ub = int(m["n_links"] or 0)
+        state.pages_crawled += n_success
+        if cfg.track_host_state:
+            # every backed-off host backs off further; every other host
+            # that succeeded decays toward base_delay
+            bad_hosts = set(m["bad_hosts"])
+            for h in bad_hosts:
+                delay, fails = state.host_state.get(h, (cfg.base_delay, 0))
+                state.host_state[h] = (min(cfg.max_delay, delay * cfg.backoff_factor), fails + 1)
+            for h in set(m["ok_hosts"]) - bad_hosts:
+                delay, _fails = state.host_state.get(h, (cfg.base_delay, 0))
+                state.host_state[h] = (max(cfg.base_delay, delay * cfg.decay_factor), 0)
         _mark("host_agg")
 
         new_docs = step.filter(F.col("outcome") == "success").select(
@@ -1001,8 +999,6 @@ class CrawlEngine:
                 F.lit(0).alias("retry_count"),
                 F.lit(iteration).alias("enqueue_iter"),
             )
-            from pyspark.sql import Observation
-
             obs_fresh = Observation(f"fresh_{iteration}")
             new_entries = new_entries.observe(
                 obs_fresh, F.count(F.lit(1)).alias("n_fresh")
@@ -1029,8 +1025,6 @@ class CrawlEngine:
         # without this the state table gains ~2·n_parts partitions per
         # superstep and task-launch overhead grows linearly with
         # iteration count (narrow op — no shuffle).
-        from pyspark.sql import Observation
-
         obs_frontier = Observation(f"frontier_{iteration}")
         is_pending = F.col("status") == "pending"
         frontier_next = frontier_next.observe(

@@ -5,6 +5,10 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")  # small + fast for unit tests
+# the session's 24g default heap is never collected down over a whole
+# suite run: its driver JVM grew to 14 GB RSS and was OOM-killed on a
+# 15 GB host, failing every test after it
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")

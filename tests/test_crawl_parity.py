@@ -366,3 +366,34 @@ def test_at_scale_plan_parity(spark, monkeypatch, cfg_kw, ranks):
         assert ranks <= used, used
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_host_state_adds_no_jobs(spark):
+    """Tracking per-host backoff state costs no Spark job: the hosts
+    that succeeded or backed off ride the step checkpoint's observe().
+    With budgets that never bind (base_budget ≥ global_budget ·
+    max_delay / base_delay) the tracked and the untracked crawl run the
+    same plans, so they must run the same number of jobs."""
+    web = WebConfig(n_pages=160, n_hosts=6, seed=42, fault_every=5)
+    kw = dict(mode="bfs", max_depth=3, max_pages=40, base_budget=40,
+              global_budget=10, max_delay=4.0, max_retries=1, max_iterations=6)
+    pages, robots, seeds, pages_df, robots_df = _build_inputs(spark, web)
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job() -> int:
+        # job ids are sequential; the tracker keeps the newest jobs
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    jobs, results = {}, {}
+    for track in (True, False):
+        engine = CrawlEngine(spark, CrawlConfig(**kw, track_host_state=track),
+                             pages_df, robots_df)
+        engine.prewarm()  # a cache's first scan runs jobs of its own
+        before = last_job()
+        results[track] = engine.run(seeds)
+        jobs[track] = last_job() - before
+    assert jobs[True] == jobs[False], jobs
+    assert results[False].state.host_state == {}
+    sim = simulate_crawl(pages, robots, seeds, CrawlConfig(**kw))
+    assert any(fails > 0 for _d, fails in sim.host_state.values())
+    _assert_parity(sim, results[True])

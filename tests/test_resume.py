@@ -68,6 +68,28 @@ def test_kill_and_resume_matches_uninterrupted(spark, tmp_path):
     assert hs_r == hs_f
 
 
+class _CountingStore(SnapshotStore):
+    def __init__(self, root: str) -> None:
+        super().__init__(root)
+        self.committed: list[int] = []
+
+    def commit(self, snapshot_id, tables, metrics=None, state=None) -> None:
+        self.committed.append(snapshot_id)
+        super().commit(snapshot_id, tables, metrics, state)
+
+
+@pytest.mark.parametrize("every, want", [(1, [1, 2, 3]), (2, [2, 3])])
+def test_each_snapshot_committed_once(spark, tmp_path, every, want):
+    """The crawl commits every `every` supersteps, and once more at the
+    end only when its last superstep is not committed yet."""
+    pages, robots, seeds = _inputs(spark)
+    store = _CountingStore(str(tmp_path / "store5"))
+    res = CrawlEngine(spark, _cfg(3), pages, robots, store=store,
+                      checkpoint_every=every).run(seeds)
+    assert res.state.iteration == 3
+    assert store.committed == want
+
+
 def test_manifest_atomicity(spark, tmp_path):
     store = SnapshotStore(str(tmp_path / "store2"))
     pages, robots, seeds = _inputs(spark)
