@@ -44,8 +44,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from crawl4ai_spark.functions.urlnorm import canonicalize_for_crawl
+from crawl4ai_spark.plans.crawl import local_relation
 
 __all__ = ["OpicScorer"]
 
@@ -69,11 +71,10 @@ class OpicScorer:
         default_cash: float | None = None,
         keep_base_score: bool = True,
     ) -> None:
-        canon = []
-        for s in seeds:
-            c = canonicalize_for_crawl(s, s)
-            if c and c not in canon:
-                canon.append(c)
+        # first occurrence of each canonical seed, in seed order
+        canon = list(dict.fromkeys(
+            c for c in (canonicalize_for_crawl(s, s) for s in seeds) if c
+        ))
         n = max(len(canon), 1)
         self.spark = spark
         self.opic_weight = float(opic_weight)
@@ -81,8 +82,8 @@ class OpicScorer:
         # the same initial endowment the seeds got
         self.default_cash = float(default_cash if default_cash is not None else 1.0 / n)
         self.keep_base_score = bool(keep_base_score)
-        self.cash: DataFrame = spark.createDataFrame(
-            [(u, 1.0 / n) for u in canon], "url string, cash double"
+        self.cash: DataFrame = local_relation(
+            spark, [(u, 1.0 / n) for u in canon], StructType.fromDDL("url string, cash double")
         )
         self.supersteps = 0
 

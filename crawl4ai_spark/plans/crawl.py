@@ -16,6 +16,18 @@ perfbench workloads), plus one parquet write per table per commit:
                    by frontier size) + batch removal → trim/seq
                    (arithmetic, windowless) → merge checkpoint
 
+Driver cost per superstep is kept to what the loop state needs:
+- rows built on the driver (the seed frontier, the empty docs,
+  crawl_log and page-cache bases) enter as JVM local relations
+  (`local_relation`), never as a PythonRDD, so no scan of them starts
+  Python workers; the seed frontier is one partition, so superstep
+  1's rank windows need no exchange;
+- every Column a superstep uses that loop state does not change is
+  built once per engine (`_superstep_columns`); per superstep only
+  the iteration literals, the host budget/delay maps, the global
+  budget and BFS level filters and the fairness column are built.  A deep_frontier
+  crawl makes ~1.6k py4j round trips instead of ~10.5k.
+
 State design: ONE frontier table subsumes the URL-seen set — every
 discovered URL keeps a row forever (status pending/done/failed/
 trimmed), so "seen" ≡ frontier.url and the seen anti-join is against
@@ -63,6 +75,7 @@ from __future__ import annotations
 import json
 import time
 from dataclasses import dataclass, field
+from types import SimpleNamespace
 
 import pandas as pd
 from pyspark.storagelevel import StorageLevel
@@ -144,6 +157,33 @@ def _host_lookup(values: dict[str, object], default, value_type: str) -> "F.Colu
         return F.lit(default).cast(value_type)
     lookup = F.from_json(F.lit(json.dumps(values)), f"map<string,{value_type}>")
     return F.coalesce(F.element_at(lookup, F.col("host")), F.lit(default).cast(value_type))
+
+
+def local_relation(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """Driver-built `rows` (tuples in `schema` order) as a JVM local
+    relation, with no Python RDD in its lineage.
+
+    `createDataFrame(<list>)` plans as a Scan ExistingRDD over a
+    PythonRDD, so every scan of it starts Python workers just to
+    unpickle the rows (0.13-0.16 s to count 512 seeds at local[2],
+    against 0.03-0.05 s here).  Rows cross once, as Arrow, and plan as
+    a LocalTableScan.  They are one partition: a global rank window
+    over them then needs no exchange (with the row count known and at
+    or under a rank limit, the optimizer drops the limit whose sort
+    otherwise gathers the rows without one, and the window plans an
+    Exchange SinglePartition: one more job).  An empty pandas frame or
+    RDD still carries a PythonRDD, so the empty relation is a
+    typed-null row filtered out: the optimizer folds it to an empty
+    LocalRelation, which a union drops."""
+    if rows:
+        pdf = pd.DataFrame(rows, columns=schema.names)
+        return spark.createDataFrame(pdf, schema).coalesce(1)
+    return (
+        spark.range(1)
+        .selectExpr(*[f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+                      for f in schema.fields])
+        .where("false")
+    )
 
 
 def make_step_udf(robots_map: dict[str, str] | None, user_agent: str,
@@ -401,14 +441,22 @@ class CrawlEngine:
         # short-circuit the fetch for cached URLs; ENABLED/WRITE_ONLY
         # upsert fetched pages back (two extra jobs per iteration,
         # only when caching is on)
-        from crawl4ai_spark.plans.cache import CacheMode
+        from crawl4ai_spark.plans.cache import CacheMode, should_read, should_write
 
         self.cache_mode = cache_mode or CacheMode.BYPASS
         if page_cache is None and self.cache_mode not in (CacheMode.BYPASS, CacheMode.DISABLED):
-            page_cache = self._empty(
+            page_cache = local_relation(spark, [], StructType.fromDDL(
                 "url string, final_url string, status_code int, html string, fetched_at_iter int"
-            )
+            ))
         self.page_cache = page_cache
+        # fixed per engine: a superstep only ever replaces a page cache
+        # that exists
+        self._read_cache = page_cache is not None and should_read(self.cache_mode)
+        self._write_cache = page_cache is not None and should_write(self.cache_mode)
+        self._frontier_schema = StructType.fromDDL(self._FRONTIER_COLS)
+        self._empty_docs = local_relation(spark, [], StructType.fromDDL(self._DOCS_COLS))
+        self._empty_log = local_relation(spark, [], StructType.fromDDL(self._LOG_COLS))
+        self._cols = self._superstep_columns()
 
     # ── schema helpers ───────────────────────────────────────────────
     # status domain: pending | done | failed | trimmed.  "trimmed"
@@ -422,8 +470,199 @@ class CrawlEngine:
     )
     _LOG_COLS = "iteration int, url string, depth int, score double, parent_url string, seq long, outcome string, batch_rank int"
 
-    def _empty(self, schema: str) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
+    def _superstep_columns(self) -> SimpleNamespace:
+        """Every Column a superstep uses that no loop state changes,
+        built once per engine.  Each F.* call or Column operator is ~13
+        py4j round trips (PySpark 4 records its call site) of ~57 µs;
+        built per superstep they cost 0.55-0.65 s per deep_frontier
+        crawl.  What depends on loop state (iteration literals, the
+        host budget and delay maps, the global budget and BFS level,
+        fairness) is built in `_iterate`, as are the columns of the
+        paths few crawls take (salting, the bucketed rank past
+        _SMALL_PENDING_MAX, the capacity trim)."""
+        cfg = self.cfg
+        col = F.col
+        frontier_names = self._frontier_schema.names
+        c = SimpleNamespace()
+        c.url_hash = F.xxhash64("url")
+        c.is_pending = col("status") == "pending"
+        c.depth = col("depth")
+        c.enqueue_iter = col("enqueue_iter")
+        c.retry_count = col("retry_count")
+
+        # ── admission ─────────────────────────────────────────────────
+        # O5 fairness aging ranks first on `_fair` (built per superstep)
+        c.order = list(self._order)
+        if cfg.fairness_timeout_iters is not None:
+            c.order = [F.asc("_fair")] + c.order
+        c.host_rank = F.row_number().over(Window.partitionBy("host").orderBy(*c.order))
+        c.within_host_budget = col("host_rank") <= col("budget")
+        c.small_rank = F.row_number().over(Window.orderBy(*c.order))
+        c.batch_rank = col("batch_rank")
+        c.batch_rank_int = col("batch_rank").cast("int")
+
+        # ── fetch ─────────────────────────────────────────────────────
+        batch_cols = [col(n) for n in (*frontier_names, "batch_rank")]
+        hit = col("cache_hit") if self._read_cache else F.lit(False)
+
+        def cache_or(cached_expr, live_expr):
+            # only reference c_* columns when the cache join added them
+            if not self._read_cache:
+                return live_expr
+            return F.when(hit, cached_expr).otherwise(live_expr)
+
+        if self._fetch_udf is not None:
+            # (host, salt): host-locality for the transport's connection
+            # reuse, salted so a hot host can't serialize the stage
+            c.fetch_partition = [
+                col("host"),
+                F.pmod(F.coalesce("url_hash", F.lit(0)), F.lit(4 * self._n_parts)),
+            ]
+            # cache hits pass a null URL so the transport never fires
+            # for them (J3 cache-hit skip)
+            c.fetch_url = F.when(~hit, col("url"))
+            c.fetch_call = None if self._pace_fetch else self._fetch_udf(c.fetch_url)
+            c.fetched_cols = [
+                *batch_cols,
+                cache_or(col("c_status"),
+                         F.coalesce(col("_fr.status_code"), F.lit(0))).alias("eff_status"),
+                cache_or(col("c_html"), col("_fr.html")).alias("eff_html"),
+                cache_or(F.coalesce("c_final_url", "url"),
+                         F.coalesce(col("_fr.final_url"), col("url"))).alias("final_url"),
+            ]
+        else:
+            is_redirect = (col("status_code") == 301) & col("redirect_to").isNotNull()
+            c.fetched_cols = [
+                *batch_cols,
+                cache_or(
+                    col("c_status"),
+                    F.when(is_redirect, F.coalesce("rt_status", F.lit(0)))
+                    .otherwise(F.coalesce("status_code", F.lit(0))),
+                ).alias("eff_status"),
+                cache_or(
+                    col("c_html"),
+                    F.when(is_redirect, col("rt_html")).otherwise(col("html")),
+                ).alias("eff_html"),
+                cache_or(
+                    F.coalesce("c_final_url", "url"),
+                    F.when(is_redirect, col("redirect_to")).otherwise(col("url")),
+                ).alias("final_url"),
+            ]
+        c.cache_cols = [col("url"), col("final_url"), col("eff_status"), col("eff_html")]
+
+        # ── step: fused UDF → outcome, observed on the checkpoint ─────
+        c.step_cols = [
+            *batch_cols, col("eff_status"), col("final_url"),
+            self._step_udf(
+                col("url"), col("host"), col("final_url"),
+                col("eff_html"), col("eff_status"),
+            ).alias("ex"),
+        ]
+        backoff = col("eff_status").isin(list(BACKOFF_CODES))
+        c.outcome = (
+            F.when(~col("ex.robots_ok"), F.lit("robots_blocked"))
+            .when(col("eff_status") == 200, F.lit("success"))
+            .when(backoff & (col("retry_count") < cfg.max_retries), F.lit("retry"))
+            .when(backoff, F.lit("gave_up"))
+            .otherwise(F.lit("fetch_error"))
+        )
+        is_success = col("outcome") == "success"
+        is_retry = col("outcome") == "retry"
+        c.is_success = is_success
+        # counters and the succeeded / backed-off host sets (at most
+        # the batch's distinct hosts) ride the checkpoint job: no job
+        c.step_aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(is_success, 1).otherwise(0)).alias("ok"),
+            F.sum(F.coalesce(F.size("ex.pl_pos"), F.lit(0))).alias("n_links"),
+            F.collect_set(F.when(is_success, col("host"))).alias("ok_hosts"),
+            F.collect_set(
+                F.when(col("outcome").isin("retry", "gave_up"), col("host"))
+            ).alias("bad_hosts"),
+        ]
+        c.docs_cols = [
+            col("url").alias("doc_id"),
+            spans_struct(col("ex")).cast(
+                "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+            ).alias("spans"),
+            col("ex.raw_markdown").alias("raw_markdown"),
+            col("ex.markdown_with_citations").alias("markdown_with_citations"),
+            col("ex.references_markdown").alias("references_markdown"),
+            col("ex.metadata").alias("metadata"),
+        ]
+        c.log_cols = [col(n) for n in
+                      ("url", "depth", "score", "parent_url", "seq", "outcome", "batch_rank")]
+
+        # ── link discovery → scored candidate set (SURVEY §3.3) ───────
+        c.can_expand = is_success & (col("depth") + 1 <= cfg.max_depth)
+        c.link_explode = [
+            col("url").alias("parent_url"),
+            col("batch_rank"),
+            (col("depth") + 1).alias("depth"),
+            F.explode(
+                F.arrays_zip(
+                    col("ex.pl_pos").alias("link_pos"),
+                    col("ex.pl_abs").alias("abs_url"),
+                    col("ex.pl_canon").alias("canon"),
+                    col("ex.pl_host").alias("host"),
+                )
+            ).alias("l"),
+        ]
+        c.link_cols = [
+            col("parent_url"), col("batch_rank"), col("depth"),
+            col("l.link_pos").alias("link_pos"),
+            col("l.abs_url").alias("abs_url"),
+            col("l.canon").alias("canon"),
+            col("l.host").alias("host"),
+        ]
+        c.valid_link = valid_crawl_url(col("abs_url"))
+        c.link_filter = compile_filters_column(cfg.filters, col("abs_url")) if cfg.filters else None
+        c.link_score = compile_scorer_column(cfg.scorer, col("canon")).cast("double")
+        c.above_threshold = col("score") >= cfg.score_threshold
+        c.link_hash = F.xxhash64("canon")
+        # within-iteration dedup keeps the first discovery of each hash:
+        # (batch_rank, link_pos) is unique per link row, so min_by is
+        # deterministic.  A link_score_fn must keep these columns; any
+        # it adds are dropped here, as new entries never read them.
+        c.first_link = F.min_by(
+            F.struct(*[col(n) for n in ("parent_url", "batch_rank", "depth", "link_pos",
+                                        "abs_url", "canon", "host", "score")]),
+            F.struct("batch_rank", "link_pos"),
+        ).alias("_first")
+        c.deduped_cols = [col("ch"), col("_first.*")]
+        c.seen_hash = col("url_hash").alias("ch")
+        # seq: (iteration << 40) + this tail — monotone in discovery
+        # order, windowless (O9)
+        c.seq_tail = (
+            F.shiftleft(col("batch_rank").cast("long"), _SEQ_RANK_SHIFT)
+            + col("link_pos").cast("long")
+        )
+        c.entry_cols = [
+            col("canon").alias("url"), col("ch").alias("url_hash"), col("host"),
+            col("depth"), col("score"), col("parent_url"),
+            F.lit("pending").alias("status"), F.lit(0).alias("retry_count"),
+        ]
+        c.fresh_aggs = [F.count(F.lit(1)).alias("n_fresh")]
+
+        # ── frontier merge ────────────────────────────────────────────
+        c.frontier_cols = [col(n) for n in frontier_names]
+        c.updated_cols = [
+            *[col(n) for n in frontier_names[:7]],  # url … seq pass through
+            F.when(is_success, F.lit("done"))
+            .when(is_retry, F.lit("pending"))
+            .otherwise(F.lit("failed")).alias("status"),
+            F.when(is_retry, col("retry_count") + 1)
+            .otherwise(col("retry_count")).alias("retry_count"),
+            col("enqueue_iter"),
+        ]
+        c.url = col("url")
+        c.frontier_aggs = [
+            F.sum(F.when(c.is_pending, 1).otherwise(0)).alias("n_pending"),
+            F.min(F.when(c.is_pending, col("depth"))).alias("min_pending_depth"),
+        ]
+        c.is_live = col("status") != "trimmed"
+        c.seen_cols = [col("url"), col("url_hash"), col("enqueue_iter").alias("first_iter")]
+        return c
 
     def prewarm(self) -> None:
         """Materialize the synthetic-corpus lookup structure (the
@@ -482,18 +721,17 @@ class CrawlEngine:
     # ── seeds ────────────────────────────────────────────────────────
     def _seed_frontier(self, seeds: list[str]) -> tuple[DataFrame, CrawlState]:
         state = CrawlState()
-        rows = []
+        rows, seen = [], set()
         for s in seeds:
             canon = canonicalize_for_crawl(s, s)
-            if not canon or not is_valid_crawl_url(canon):
+            if not canon or canon in seen or not is_valid_crawl_url(canon):
                 continue
-            if any(r[0] == canon for r in rows):
-                continue
+            seen.add(canon)
             rows.append((canon, None, get_host(canon), 0, 0.0, None, state.next_seq,
                          "pending", 0, 0))
             state.next_seq += 1
-        frontier = self.spark.createDataFrame(rows, self._FRONTIER_COLS).withColumn(
-            "url_hash", F.xxhash64("url")
+        frontier = local_relation(self.spark, rows, self._frontier_schema).withColumn(
+            "url_hash", self._cols.url_hash
         )
         state.frontier_ub = len(rows)
         state.pending_count = len(rows)
@@ -503,9 +741,7 @@ class CrawlEngine:
     # ── main loop ────────────────────────────────────────────────────
     def run(self, seeds: list[str]) -> CrawlResultTables:
         frontier, state = self._seed_frontier(seeds)
-        docs = self._empty(self._DOCS_COLS)
-        log = self._empty(self._LOG_COLS)
-        return self._loop(frontier, docs, log, state)
+        return self._loop(frontier, self._empty_docs, self._empty_log, state)
 
     @staticmethod
     def _union_parts(base: DataFrame, parts: list[DataFrame]) -> DataFrame:
@@ -569,10 +805,8 @@ class CrawlEngine:
 
     def _result(self, frontier, docs, log, state) -> CrawlResultTables:
         return CrawlResultTables(
-            frontier=frontier.filter(F.col("status") != "trimmed"),
-            seen=frontier.select(
-                "url", "url_hash", F.col("enqueue_iter").alias("first_iter")
-            ),
+            frontier=frontier.filter(self._cols.is_live),
+            seen=frontier.select(*self._cols.seen_cols),
             docs=docs,
             crawl_log=log,
             state=state,
@@ -595,9 +829,9 @@ class CrawlEngine:
     # ── one superstep ────────────────────────────────────────────────
     def _iterate(self, frontier, state):
         cfg = self.cfg
-        spark = self.spark
+        c = self._cols
+        n_parts = self._n_parts
         iteration = state.iteration + 1
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
         tmark = time.time()
         timings: dict[str, float] = {}
@@ -615,7 +849,7 @@ class CrawlEngine:
         if state.pending_count == 0:
             return None
 
-        pending = frontier.filter(F.col("status") == "pending")
+        pending = frontier.filter(c.is_pending)
 
         # BFS: whole current level is the candidate set (O2).  The
         # level (min pending depth) rides the previous merge job's
@@ -627,7 +861,7 @@ class CrawlEngine:
                 if not level_row or level_row[0]["d"] is None:
                     return None
                 state.min_pending_depth = int(level_row[0]["d"])
-            pending = pending.filter(F.col("depth") == state.min_pending_depth)
+            pending = pending.filter(c.depth == state.min_pending_depth)
 
         # ── job 1: politeness admission window (P1): per-host budget
         #    rank (keyed window), then exact PARALLEL global top-K ────
@@ -645,14 +879,12 @@ class CrawlEngine:
         # O5 fairness aging: starved entries jump the queue with
         # priority -wait; fresh entries rank by retry_count — the
         # dispatcher's anti-starvation rule at iteration granularity
-        order = list(self._order)
         if cfg.fairness_timeout_iters is not None:
-            wait = F.lit(iteration) - F.col("enqueue_iter")
+            wait = F.lit(iteration) - c.enqueue_iter
             fair = F.when(
                 wait > cfg.fairness_timeout_iters, (-wait).cast("double")
-            ).otherwise(F.col("retry_count").cast("double"))
+            ).otherwise(c.retry_count.cast("double"))
             cands = cands.withColumn("_fair", fair)
-            order = [F.asc("_fair")] + order
         if cap_can_bind:
             cands = cands.withColumn(
                 "budget", _host_lookup(budgets, cfg.base_budget, "int")
@@ -670,7 +902,7 @@ class CrawlEngine:
                 s = int(cfg.admission_salts)
                 salt = F.pmod(F.coalesce(F.col("url_hash"), F.lit(0)), F.lit(s))
                 pre_rank = F.row_number().over(
-                    Window.partitionBy("host", "_salt").orderBy(*order)
+                    Window.partitionBy("host", "_salt").orderBy(*c.order)
                 )
                 cands = (
                     cands.withColumn("_salt", salt)
@@ -678,10 +910,9 @@ class CrawlEngine:
                     .filter(F.col("_pre_rank") <= F.col("budget"))
                     .drop("_salt", "_pre_rank")
                 )
-            host_rank = F.row_number().over(Window.partitionBy("host").orderBy(*order))
             cands = (
-                cands.withColumn("host_rank", host_rank)
-                .filter(F.col("host_rank") <= F.col("budget"))
+                cands.withColumn("host_rank", c.host_rank)
+                .filter(c.within_host_budget)
                 .drop("budget", "host_rank")
             )
         # Exact parallel global top-K.  With no scorer the order key
@@ -693,9 +924,7 @@ class CrawlEngine:
         if state.frontier_ub <= _SMALL_PENDING_MAX:
             # small-N shortcut: one skinny single-task sort beats the
             # two-phase rank's extra stage waves below ~1M pending
-            ranked = cands.withColumn(
-                "batch_rank", F.row_number().over(Window.orderBy(*order))
-            )
+            ranked = cands.withColumn("batch_rank", c.small_rank)
         elif cfg.scorer is None and cfg.fairness_timeout_iters is None:
             it_part = F.shiftrightunsigned(F.col("seq"), _SEQ_ITER_SHIFT)
             rank_part = F.shiftrightunsigned(F.col("seq"), _SEQ_RANK_SHIFT).bitwiseAND(
@@ -715,14 +944,14 @@ class CrawlEngine:
                     + F.shiftleft(it_part, 12)
                     + band
                 )
-            ranked = with_bucketed_rank(cands, bucket, order, "batch_rank")
+            ranked = with_bucketed_rank(cands, bucket, c.order, "batch_rank")
         else:
-            ranked = with_global_rank(cands, order, "batch_rank", n_parts)
+            ranked = with_global_rank(cands, c.order, "batch_rank", n_parts)
         if cfg.fairness_timeout_iters is not None:
             ranked = ranked.drop("_fair")
         batch = (
-            ranked.filter(F.col("batch_rank") <= global_budget)
-            .withColumn("batch_rank", F.col("batch_rank").cast("int"))
+            ranked.filter(c.batch_rank <= global_budget)
+            .withColumn("batch_rank", c.batch_rank_int)
         )
         _mark("admission")
         state.iteration = iteration
@@ -735,31 +964,14 @@ class CrawlEngine:
         # shuffles, never builds over the corpus).  At production
         # scale this join is replaced by the network fetch UDF; the
         # shape stays batch-small.
-        from crawl4ai_spark.plans.cache import cache_lookup, cache_merge, should_read, should_write
+        from crawl4ai_spark.plans.cache import cache_lookup, cache_merge
 
-        read_cache = self.page_cache is not None and should_read(self.cache_mode)
-        write_cache = self.page_cache is not None and should_write(self.cache_mode)
-        batch_cols = list(batch.columns)
-        fetch_in = cache_lookup(batch, self.page_cache) if read_cache else batch
-        hit = F.col("cache_hit") if read_cache else F.lit(False)
-
-        def cache_or(cached_expr, live_expr):
-            # only reference c_* columns when the cache join added them
-            if not read_cache:
-                return live_expr
-            return F.when(hit, cached_expr).otherwise(live_expr)
-
+        fetch_in = cache_lookup(batch, self.page_cache) if self._read_cache else batch
         if self._fetch_udf is not None:
             # Real-fetch path (S5): repartition the admitted batch by
-            # (host, salt) — host-locality for the transport's
-            # connection reuse, salted so a hot host can't serialize
-            # the stage — then one transport UDF per row batch.
-            # Cache hits pass a null URL so the transport never fires
-            # for them (J3 cache-hit skip).
-            fetch_in = fetch_in.repartition(
-                n_parts, F.col("host"),
-                F.pmod(F.coalesce("url_hash", F.lit(0)), F.lit(4 * n_parts)),
-            )
+            # (host, salt), then one transport UDF per row batch.
+            fetch_in = fetch_in.repartition(n_parts, *c.fetch_partition)
+            fetch_call = c.fetch_call
             if self._pace_fetch:
                 # per-host delay: the live backoff/decay delay from
                 # state.host_state (the rows the admission budgets come
@@ -769,39 +981,12 @@ class CrawlEngine:
                     {h: float(d) for h, (d, _f) in state.host_state.items()},
                     float(cfg.base_delay), "double",
                 )
-                fetched = fetch_in.withColumn(
-                    "_fr", self._fetch_udf(F.when(~hit, F.col("url")), delay_col)
-                )
-            else:
-                fetched = fetch_in.withColumn(
-                    "_fr", self._fetch_udf(F.when(~hit, F.col("url")))
-                )
-            fetched = fetched.select(
-                *[F.col(c) for c in batch_cols],
-                cache_or(F.col("c_status"),
-                         F.coalesce(F.col("_fr.status_code"), F.lit(0))).alias("eff_status"),
-                cache_or(F.col("c_html"), F.col("_fr.html")).alias("eff_html"),
-                cache_or(F.coalesce("c_final_url", "url"),
-                         F.coalesce(F.col("_fr.final_url"), F.col("url"))).alias("final_url"),
-            )
+                fetch_call = self._fetch_udf(c.fetch_url, delay_col)
+            fetched = fetch_in.withColumn("_fr", fetch_call).select(*c.fetched_cols)
         else:
-            fetched = fetch_in.hint("shuffle_hash").join(self.pages_eff, "url", "left")
-            is_redirect = (F.col("status_code") == 301) & F.col("redirect_to").isNotNull()
-            fetched = fetched.select(
-                *[F.col(c) for c in batch_cols],
-                cache_or(
-                    F.col("c_status"),
-                    F.when(is_redirect, F.coalesce("rt_status", F.lit(0)))
-                    .otherwise(F.coalesce("status_code", F.lit(0))),
-                ).alias("eff_status"),
-                cache_or(
-                    F.col("c_html"),
-                    F.when(is_redirect, F.col("rt_html")).otherwise(F.col("html")),
-                ).alias("eff_html"),
-                cache_or(
-                    F.coalesce("c_final_url", "url"),
-                    F.when(is_redirect, F.col("redirect_to")).otherwise(F.col("url")),
-                ).alias("final_url"),
+            fetched = (
+                fetch_in.hint("shuffle_hash").join(self.pages_eff, "url", "left")
+                .select(*c.fetched_cols)
             )
         # Stage width note: the fetch join's probe side is the CACHED
         # pages_eff at a fixed n_parts partitioning, so the join (and
@@ -810,47 +995,19 @@ class CrawlEngine:
         # relation.  No repartition needed (an explicit one here would
         # shuffle the heavy post-UDF output: Catalyst commutes the
         # UDF projection below a url-only repartition).
-        if write_cache:
+        if self._write_cache:
             # materialize the html-bearing fetch once (so the step
             # projection below and the cache upsert share ONE fetch —
             # a transport must never fire twice per URL), then upsert
             fetched = fetched.localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
             self.page_cache = cache_merge(
-                self.page_cache,
-                fetched.select("url", "final_url", "eff_status", "eff_html"),
-                iteration,
+                self.page_cache, fetched.select(*c.cache_cols), iteration,
             ).localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
-        step = fetched.select(
-            *batch_cols, "eff_status", "final_url",
-            self._step_udf(
-                F.col("url"), F.col("host"), F.col("final_url"),
-                F.col("eff_html"), F.col("eff_status"),
-            ).alias("ex"),
-        )
-        backoff = F.col("eff_status").isin(list(BACKOFF_CODES))
-        step = step.withColumn(
-            "outcome",
-            F.when(~F.col("ex.robots_ok"), F.lit("robots_blocked"))
-            .when(F.col("eff_status") == 200, F.lit("success"))
-            .when(backoff & (F.col("retry_count") < cfg.max_retries), F.lit("retry"))
-            .when(backoff, F.lit("gave_up"))
-            .otherwise(F.lit("fetch_error")),
-        )
+        step = fetched.select(*c.step_cols).withColumn("outcome", c.outcome)
         if self.capture_plans:
             self.last_plans["step"] = step._jdf.queryExecution().executedPlan().toString()
-        # counters and the succeeded / backed-off host sets (at most
-        # the batch's distinct hosts) ride the checkpoint job: no job
         obs = Observation(f"step_{iteration}")
-        step = step.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("outcome") == "success", 1).otherwise(0)).alias("ok"),
-            F.sum(F.coalesce(F.size("ex.pl_pos"), F.lit(0))).alias("n_links"),
-            F.collect_set(F.when(F.col("outcome") == "success", F.col("host"))).alias("ok_hosts"),
-            F.collect_set(
-                F.when(F.col("outcome").isin("retry", "gave_up"), F.col("host"))
-            ).alias("bad_hosts"),
-        )
+        step = step.observe(obs, *c.step_aggs)
         step = step.localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
         _mark("fetch_extract")
 
@@ -875,16 +1032,8 @@ class CrawlEngine:
                 state.host_state[h] = (max(cfg.base_delay, delay * cfg.decay_factor), 0)
         _mark("host_agg")
 
-        new_docs = step.filter(F.col("outcome") == "success").select(
-            F.col("url").alias("doc_id"),
-            spans_struct(F.col("ex")).cast(
-                "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-            ).alias("spans"),
-            F.col("ex.raw_markdown").alias("raw_markdown"),
-            F.col("ex.markdown_with_citations").alias("markdown_with_citations"),
-            F.col("ex.references_markdown").alias("references_markdown"),
-            F.col("ex.metadata").alias("metadata"),
-            F.lit(iteration).alias("iteration"),
+        new_docs = step.filter(c.is_success).select(
+            *c.docs_cols, F.lit(iteration).alias("iteration")
         )
 
         # ── link discovery → scored candidate set (SURVEY §3.3) ──────
@@ -893,37 +1042,14 @@ class CrawlEngine:
         obs_fresh = None
         if can_discover:
             links = (
-                step.filter(
-                    (F.col("outcome") == "success")
-                    & (F.col("depth") + 1 <= cfg.max_depth)
-                )
-                .select(
-                    F.col("url").alias("parent_url"),
-                    F.col("batch_rank"),
-                    (F.col("depth") + 1).alias("depth"),
-                    F.explode(
-                        F.arrays_zip(
-                            F.col("ex.pl_pos").alias("link_pos"),
-                            F.col("ex.pl_abs").alias("abs_url"),
-                            F.col("ex.pl_canon").alias("canon"),
-                            F.col("ex.pl_host").alias("host"),
-                        )
-                    ).alias("l"),
-                )
-                .select(
-                    "parent_url", "batch_rank", "depth",
-                    F.col("l.link_pos").alias("link_pos"),
-                    F.col("l.abs_url").alias("abs_url"),
-                    F.col("l.canon").alias("canon"),
-                    F.col("l.host").alias("host"),
-                )
-                .filter(valid_crawl_url(F.col("abs_url")))
+                step.filter(c.can_expand)
+                .select(*c.link_explode)
+                .select(*c.link_cols)
+                .filter(c.valid_link)
             )
-            if cfg.filters:
-                links = links.filter(compile_filters_column(cfg.filters, F.col("abs_url")))
-            links = links.withColumn(
-                "score", compile_scorer_column(cfg.scorer, F.col("canon")).cast("double")
-            )
+            if c.link_filter is not None:
+                links = links.filter(c.link_filter)
+            links = links.withColumn("score", c.link_score)
             if self.link_score_fn is not None:
                 # R11 seam: a DataFrame→DataFrame hook over the scored
                 # candidate links (columns incl. canon/host/depth/score)
@@ -933,32 +1059,23 @@ class CrawlEngine:
                 # Must preserve the link columns; may rewrite `score`.
                 links = self.link_score_fn(links, iteration)
             if cfg.score_threshold > float("-inf"):
-                links = links.filter(F.col("score") >= cfg.score_threshold)
-            links = links.withColumn("ch", F.xxhash64("canon"))
+                links = links.filter(c.above_threshold)
+            links = links.withColumn("ch", c.link_hash)
 
             # within-iteration dedup: first discovery wins (J7).
             # groupBy + min_by instead of a row_number window: the
             # partial (map-side) min collapses duplicate links BEFORE
             # the shuffle — at fan-out 8 most links are dupes, so the
             # exchange ships a fraction of the rows and skips the
-            # per-partition sort entirely.  (batch_rank, link_pos) is
-            # unique per link row, so min_by is deterministic and
-            # equals the window's rn=1 row exactly.  The groupBy also
-            # leaves the output hash-partitioned by ch, which the
-            # seen anti-join below consumes without a new exchange.
-            link_cols = [c for c in links.columns if c != "ch"]
-            deduped = (
-                links.groupBy("ch")
-                .agg(
-                    F.min_by(
-                        F.struct(*link_cols), F.struct("batch_rank", "link_pos")
-                    ).alias("_first")
-                )
-                .select("ch", "_first.*")
-            )
+            # per-partition sort entirely.  min_by over the unique
+            # (batch_rank, link_pos) equals the window's rn=1 row
+            # exactly.  The groupBy also leaves the output hash-
+            # partitioned by ch, which the seen anti-join below
+            # consumes without a new exchange.
+            deduped = links.groupBy("ch").agg(c.first_link).select(*c.deduped_cols)
             # seen-set anti-join (J1): frontier side ships ONLY 8-byte
             # hashes — the one seen-set path (frontier ⊇ seen).
-            seen_hashes = frontier.select(F.col("url_hash").alias("ch"))
+            seen_hashes = frontier.select(c.seen_hash)
             if state.frontier_ub <= _BCAST_SEEN_MAX:
                 # small-N shortcut: ≤512k hashes broadcast (~4 MB) →
                 # BroadcastHashJoin LeftAnti, zero exchanges; beyond
@@ -980,45 +1097,21 @@ class CrawlEngine:
             # fan-out-8 crawl fires on nearly every superstep while the
             # actual unique-new count almost never binds: two shuffle
             # waves per superstep for a cut that wasn't taken.
-            # seq: arithmetic (iteration << 40 | batch_rank << 16 |
-            # link_pos) — monotone in discovery order, windowless (O9)
-            seq = (
-                F.lit(int(iteration) << _SEQ_ITER_SHIFT).cast("long")
-                + F.shiftleft(F.col("batch_rank").cast("long"), _SEQ_RANK_SHIFT)
-                + F.col("link_pos").cast("long")
-            )
             new_entries = fresh.select(
-                F.col("canon").alias("url"),
-                F.col("ch").alias("url_hash"),
-                F.col("host"),
-                F.col("depth"),
-                F.col("score"),
-                F.col("parent_url"),
-                seq.alias("seq"),
-                F.lit("pending").alias("status"),
-                F.lit(0).alias("retry_count"),
+                *c.entry_cols,
+                (F.lit(int(iteration) << _SEQ_ITER_SHIFT).cast("long") + c.seq_tail).alias("seq"),
                 F.lit(iteration).alias("enqueue_iter"),
             )
             obs_fresh = Observation(f"fresh_{iteration}")
-            new_entries = new_entries.observe(
-                obs_fresh, F.count(F.lit(1)).alias("n_fresh")
-            )
+            new_entries = new_entries.observe(obs_fresh, *c.fresh_aggs)
 
         # ── job 4: frontier merge (the MERGE INTO stand-in) ──────────
-        updated = step.select(
-            "url", "url_hash", "host", "depth", "score", "parent_url", "seq",
-            F.when(F.col("outcome") == "success", F.lit("done"))
-            .when(F.col("outcome") == "retry", F.lit("pending"))
-            .otherwise(F.lit("failed")).alias("status"),
-            F.when(F.col("outcome") == "retry", F.col("retry_count") + 1)
-            .otherwise(F.col("retry_count")).alias("retry_count"),
-            "enqueue_iter",
-        )
+        updated = step.select(*c.updated_cols)
         # batch removal: broadcast anti against the (small, cached)
         # step — the big frontier streams, no shuffle
         frontier_next = frontier.join(
-            F.broadcast(step.select("url")), "url", "left_anti"
-        ).select(updated.columns).unionByName(updated)
+            F.broadcast(step.select(c.url)), "url", "left_anti"
+        ).select(*c.frontier_cols).unionByName(updated)
         if new_entries is not None:
             frontier_next = frontier_next.unionByName(new_entries)
         # coalesce: unions sum their parents' partition counts, so
@@ -1026,12 +1119,7 @@ class CrawlEngine:
         # superstep and task-launch overhead grows linearly with
         # iteration count (narrow op — no shuffle).
         obs_frontier = Observation(f"frontier_{iteration}")
-        is_pending = F.col("status") == "pending"
-        frontier_next = frontier_next.observe(
-            obs_frontier,
-            F.sum(F.when(is_pending, 1).otherwise(0)).alias("n_pending"),
-            F.min(F.when(is_pending, F.col("depth"))).alias("min_pending_depth"),
-        )
+        frontier_next = frontier_next.observe(obs_frontier, *c.frontier_aggs)
         frontier_next = frontier_next.coalesce(n_parts)
         if self.capture_plans:
             self.last_plans["frontier"] = (
@@ -1056,7 +1144,7 @@ class CrawlEngine:
         n_fresh = int(obs_fresh.get["n_fresh"] or 0) if obs_fresh is not None else 0
         capacity = cfg.max_pages - state.pages_crawled
         if n_fresh > capacity:
-            is_fresh = (F.col("enqueue_iter") == iteration) & (F.col("status") == "pending")
+            is_fresh = (c.enqueue_iter == iteration) & c.is_pending
             fresh_rows = frontier_next.filter(is_fresh)
             if cfg.mode == "bfs" and cfg.scorer is not None:
                 fresh_rows = with_global_rank(
@@ -1093,10 +1181,7 @@ class CrawlEngine:
         # entries) — a tight bound keeps the small-N plan shortcuts
         # live as long as they're actually profitable
         state.frontier_ub += n_fresh
-        new_log = step.select(
-            F.lit(iteration).alias("iteration"), "url", "depth", "score",
-            "parent_url", "seq", "outcome", "batch_rank",
-        )
+        new_log = step.select(F.lit(iteration).alias("iteration"), *c.log_cols)
         _mark("merge")
         if self.verbose_timing:
             print(

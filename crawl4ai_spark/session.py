@@ -20,6 +20,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def default_driver_memory(mem_total_bytes: int | None) -> str:
+    """Default `spark.driver.memory`: half the host's memory, at most
+    24g (24g when the host's memory is unknown).  A fixed 24g let a
+    whole test-suite run grow the driver JVM past a 15 GB host's memory
+    until the kernel killed it."""
+    if not mem_total_bytes:
+        return f"{_MAX_DRIVER_MEM_MB}m"
+    return f"{min(_MAX_DRIVER_MEM_MB, mem_total_bytes // 2 // (1 << 20))}m"
+
+
+def _mem_total_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return None
+
 
 def get_spark(
     app_name: str = "crawl4ai_spark",
@@ -59,12 +78,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"))
         .config("spark.sql.session.timeZone", "UTC")
-        # 24g heap: the crawl loop holds a few GB of localCheckpoint
-        # blocks between natural GCs.  Do NOT set a short
-        # spark.cleaner.periodicGC.interval — it calls System.gc(),
-        # and a forced full GC on this heap stop-the-worlds for
-        # seconds (measured up to 46 s mid-crawl).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # up to a 24g heap: the crawl loop holds a few GB of
+        # localCheckpoint blocks between natural GCs.  Do NOT set a
+        # short spark.cleaner.periodicGC.interval — it calls
+        # System.gc(), and a forced full GC on this heap stop-the-
+        # worlds for seconds (measured up to 46 s mid-crawl).
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory(_mem_total_bytes()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # shuffled-hash over sort-merge where legal: the crawl's fetch

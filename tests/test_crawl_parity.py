@@ -397,3 +397,56 @@ def test_host_state_adds_no_jobs(spark):
     sim = simulate_crawl(pages, robots, seeds, CrawlConfig(**kw))
     assert any(fails > 0 for _d, fails in sim.host_state.values())
     _assert_parity(sim, results[True])
+
+
+def _scans_python(df) -> bool:
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+@pytest.mark.parametrize("supersteps", [0, 2])
+def test_driver_rows_scan_without_python(spark, supersteps):
+    """Rows built on the driver (the seed frontier, the empty docs and
+    crawl_log bases) are JVM local relations: scanning a result table
+    starts no Python worker just to unpickle them."""
+    pages, robots, seeds, pages_df, robots_df = _build_inputs(spark)
+    cfg = CrawlConfig(**{**BFS_SCORED_CFG, "max_iterations": supersteps})
+    eng = CrawlEngine(spark, cfg, pages_df, robots_df).run(seeds)
+    assert eng.state.iteration == supersteps
+    for name in ("frontier", "seen", "docs", "crawl_log"):
+        assert not _scans_python(getattr(eng, name)), name
+    _assert_parity(simulate_crawl(pages, robots, seeds, cfg), eng)
+
+
+def test_seed_frontier_dedups_in_first_occurrence_order(spark):
+    """Seeds are canonicalized, invalid ones dropped and duplicates kept
+    at their first occurrence; seq numbers the survivors 0..n-1."""
+    _pages, _robots, _seeds, pages_df, robots_df = _build_inputs(spark)
+    eng = CrawlEngine(spark, CrawlConfig(**BFS_SCORED_CFG), pages_df, robots_df)
+    seeds = [
+        "https://b.example.com/x",
+        "HTTPS://A.Example.com/y#frag",
+        "not a url",
+        "https://b.example.com/x",
+        "https://a.example.com/y",
+        "https://c.example.com/",
+    ]
+    frontier, state = eng._seed_frontier(seeds)
+    got = [(r["url"], r["seq"], r["host"])
+           for r in frontier.orderBy("seq").collect()]
+    assert got == [
+        ("https://b.example.com/x", 0, "b.example.com"),
+        ("https://a.example.com/y", 1, "a.example.com"),
+        ("https://c.example.com", 2, "c.example.com"),
+    ]
+    assert (state.next_seq, state.pending_count, state.frontier_ub) == (3, 3, 3)
+
+    # 20k seeds, every tenth a repeat of an earlier one
+    firsts = [i - 9 if i % 10 == 9 else i for i in range(20_000)]
+    many = [f"https://h{i % 97}.example.com/p{i}" for i in firsts]
+    frontier, state = eng._seed_frontier(many)
+    want = list(dict.fromkeys(many))
+    rows = frontier.orderBy("seq").collect()
+    assert [r["url"] for r in rows] == want
+    assert [r["seq"] for r in rows] == list(range(len(want)))
+    assert all(r["url_hash"] is not None and r["status"] == "pending" for r in rows)
+    assert state.pending_count == state.frontier_ub == len(want) == 18_000
