@@ -3,8 +3,8 @@
 A brand-new distributed re-expression of the crawl semantics of the
 reference engine (cbwinslow/crawl4ai, studied read-only at
 /root/reference — see SURVEY.md): a partitioned priority frontier,
-a bloom-sidecar + exact-anti-join URL-seen set over canonicalized and
-hashed URLs, robots-aware per-host politeness, and an HTML →
+an exact hash-anti-join URL-seen set over canonicalized and hashed
+URLs, robots-aware per-host politeness, and an HTML →
 markdown/media extraction pipeline implemented as vectorized pandas
 UDFs emitting interleaved text+media span documents.
 

@@ -1,4 +1,4 @@
 """Operators: the distributed building blocks beyond plain DataFrame
-verbs — the bloom-sidecar seen set, frontier analytics, and the
+verbs — the cuckoo seen filter, frontier analytics, and the
 training-data-pipeline operators (dedup, similarity search,
 text analysis, multimodal plumbing)."""

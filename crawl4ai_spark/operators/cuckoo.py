@@ -1,7 +1,7 @@
 """Partitioned cuckoo-filter for the URL-seen set (SURVEY §4.2.3).
 
-The bloom sidecar (`operators.bloom`) answers "maybe seen?" but can
-never forget: once a URL's bits are set they stay set, so cache-expiry
+A bloom filter answers "maybe seen?" but can never forget: once a
+URL's bits are set they stay set, so cache-expiry
 / recrawl semantics (reference `cache_context.py` CacheMode.ENABLED
 with TTL'd invalidation) need a full rebuild.  The cuckoo filter
 (partial-key cuckoo hashing, Fan et al. 2014 — public) supports
@@ -10,8 +10,8 @@ which makes it the long-lived cross-run seen state that must drop
 entries when a page's cache entry expires (the streaming crawl's seen
 gate, and plans/recrawl.forget_expired).
 
-Layout mirrors the bloom sidecar so it snapshots through the
-SnapshotStore like any other state: `n_shards` independent filters
+The filter is a table, so it snapshots through the SnapshotStore
+like any other state: `n_shards` independent filters
 keyed by pmod(h2, n_shards); each shard row is
 
     (shard int, table binary, stash binary)

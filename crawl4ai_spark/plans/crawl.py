@@ -74,7 +74,7 @@ from __future__ import annotations
 
 import json
 import time
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 from types import SimpleNamespace
 
 import pandas as pd
@@ -338,7 +338,6 @@ class CrawlEngine:
         store: SnapshotStore | None = None,
         checkpoint_every: int = 1,
         verbose_timing: bool = False,
-        capture_plans: bool = False,
         transport_factory=None,
         transport_cache_key: str | None = None,
         pace_fetch: bool = False,
@@ -410,7 +409,6 @@ class CrawlEngine:
         self.store = store
         self.checkpoint_every = checkpoint_every
         self.verbose_timing = verbose_timing
-        self.capture_plans = capture_plans
         # J4 robots gate: the (host → rules) dim is collected into the
         # fused UDF's closure
         robots_map = None
@@ -436,7 +434,6 @@ class CrawlEngine:
             self._order = [F.desc("enqueue_iter"), F.asc("seq")]
         else:
             self._order = [F.asc("seq")]
-        self.last_plans: dict[str, str] = {}   # debug: physical plans per phase
         # page-cache modes (S10/J3, plans.cache): ENABLED/READ_ONLY
         # short-circuit the fetch for cached URLs; ENABLED/WRITE_ONLY
         # upsert fetched pages back (two extra jobs per iteration,
@@ -738,6 +735,9 @@ class CrawlEngine:
         state.min_pending_depth = 0 if rows else None
         return frontier, state
 
+    # stop bounds: a resume may extend them
+    _RESUME_MAY_CHANGE = frozenset({"max_pages", "max_iterations"})
+
     # ── main loop ────────────────────────────────────────────────────
     def run(self, seeds: list[str]) -> CrawlResultTables:
         frontier, state = self._seed_frontier(seeds)
@@ -750,13 +750,36 @@ class CrawlEngine:
             out = out.unionByName(p)
         return out
 
+    def _config_state(self) -> dict:
+        """The crawl config as the manifest stores it (a JSON round trip)."""
+        return json.loads(json.dumps(asdict(self.cfg)))
+
     def resume(self) -> CrawlResultTables:
         """Continue from the store's latest committed snapshot
-        (north rule: resumable from checkpoint)."""
-        assert self.store is not None, "resume requires a SnapshotStore"
+        (north rule: resumable from checkpoint).
+
+        Raises ValueError when the config differs from the one the
+        snapshot was committed under: a resume under another mode,
+        scorer, filter or budget would mix two orderings.  Only the stop
+        bounds (`_RESUME_MAY_CHANGE`) may change, so a resume can
+        extend a crawl.  A manifest without a stored config resumes
+        unchecked."""
+        if self.store is None:
+            raise ValueError("resume requires a SnapshotStore")
         m = self.store.read_manifest()
-        assert m, "no committed snapshot to resume from"
+        if not m:
+            raise FileNotFoundError(f"no committed snapshot to resume from in {self.store.root!r}")
         st = m["state"]
+        if "config" in st:
+            now = self._config_state()
+            changed = sorted(
+                k for k in st["config"].keys() | now.keys()
+                if k not in self._RESUME_MAY_CHANGE and st["config"].get(k) != now.get(k)
+            )
+            if changed:
+                raise ValueError(
+                    f"resume config differs from the committed crawl's in {', '.join(changed)}"
+                )
         state = CrawlState(
             iteration=st["iteration"],
             next_seq=st["next_seq"],
@@ -823,7 +846,8 @@ class CrawlEngine:
             state={"iteration": state.iteration, "next_seq": state.next_seq,
                    "pages_crawled": state.pages_crawled,
                    "frontier_ub": state.frontier_ub,
-                   "host_state": {h: list(v) for h, v in state.host_state.items()}},
+                   "host_state": {h: list(v) for h, v in state.host_state.items()},
+                   "config": self._config_state()},
         )
 
     # ── one superstep ────────────────────────────────────────────────
@@ -1004,8 +1028,6 @@ class CrawlEngine:
                 self.page_cache, fetched.select(*c.cache_cols), iteration,
             ).localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
         step = fetched.select(*c.step_cols).withColumn("outcome", c.outcome)
-        if self.capture_plans:
-            self.last_plans["step"] = step._jdf.queryExecution().executedPlan().toString()
         obs = Observation(f"step_{iteration}")
         step = step.observe(obs, *c.step_aggs)
         step = step.localCheckpoint(eager=True, storageLevel=self._CKPT_LEVEL)
@@ -1082,10 +1104,6 @@ class CrawlEngine:
                 # that the hash-partitioned shuffle anti-join takes over
                 seen_hashes = F.broadcast(seen_hashes)
             fresh = deduped.join(seen_hashes, "ch", "left_anti")
-            if self.capture_plans:
-                self.last_plans["seen_join"] = (
-                    fresh._jdf.queryExecution().executedPlan().toString()
-                )
 
             # capacity trim (O4) is RETROACTIVE: every fresh row is
             # enqueued pending, an observe() on this same checkpoint
@@ -1121,10 +1139,6 @@ class CrawlEngine:
         obs_frontier = Observation(f"frontier_{iteration}")
         frontier_next = frontier_next.observe(obs_frontier, *c.frontier_aggs)
         frontier_next = frontier_next.coalesce(n_parts)
-        if self.capture_plans:
-            self.last_plans["frontier"] = (
-                frontier_next._jdf.queryExecution().executedPlan().toString()
-            )
         frontier_next = frontier_next.localCheckpoint(eager=True, storageLevel=self._CKPT_HOT_LEVEL)
         _obs_f = obs_frontier.get
         state.pending_count = int(_obs_f["n_pending"] or 0)

@@ -13,7 +13,8 @@ handling the reference doesn't have.
 
 `host_politeness_stream`: per-host RateLimiter state as a custom
 STATEFUL streaming operator (applyInPandasWithState) — the always-on
-analogue of the batch engine's host-state dim merge.
+analogue of the batch engine's driver `host_state` dict, which each
+superstep updates from the host sets observed on the step checkpoint.
 
 `stream_dedup_exact` / `first_seen_stream`: streaming exact
 deduplication — the always-on analogue of the batch hash-groupBy
@@ -201,8 +202,10 @@ def host_politeness_stream(
     operator: outcomes(host string, status int) → one updated
     (host, delay, fails, n_ok, n_bad) row per host per micro-batch.
 
-    Semantics are EXACTLY the batch engine's host-state dim merge
-    (plans/crawl.py, itself the reference RateLimiter
+    Semantics are EXACTLY the batch engine's `host_state` update
+    (plans/crawl.py: the driver dict, updated from the step
+    checkpoint's observed ok/backed-off host sets; itself the
+    reference RateLimiter
     /root/reference/crawl4ai/async_dispatcher.py:45-85 made
     deterministic): any 429/503 in the batch → delay ×backoff_factor
     capped at max_delay, fails+1; else any success → delay

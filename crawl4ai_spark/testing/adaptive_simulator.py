@@ -224,7 +224,8 @@ def simulate_embedding_digest(
     embedding_kb_threshold: float = 0.95,
     coverage_tau: float | None = None,
 ) -> SimDigestResult:
-    """Sequential mirror of plans/adaptive._embedding_digest — same
+    """Sequential mirror of plans/adaptive.adaptive_digest with
+    DigestConfig(strategy="embedding") — same
     semantics as the reference EmbeddingStrategy loop
     (adaptive_crawler.py:593-1228 + digest :1290-1397), list/dict
     based, numpy-free.  The parity oracle for the Spark loop."""

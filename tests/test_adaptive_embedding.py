@@ -1,5 +1,5 @@
-"""EmbeddingStrategy digest parity: plans/adaptive._embedding_digest
-≡ the sequential simulator (testing/adaptive_simulator.
+"""EmbeddingStrategy digest parity: plans/adaptive.adaptive_digest
+with strategy="embedding" ≡ the sequential simulator (testing/adaptive_simulator.
 simulate_embedding_digest) on crawl order, stop iteration, stop
 reason, and metric values — the embedding-strategy analogue of
 test_adaptive_digest.py, covering all six stop reasons

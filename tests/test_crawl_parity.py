@@ -10,6 +10,8 @@ and host-state trajectory exactly, on the same synthetic web.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -183,6 +185,52 @@ def test_fetch_seam_parity(spark):
     _assert_parity(sim, eng)
 
 
+def _sql_executions(spark) -> list:
+    """The executions in Spark's SQL status store, oldest first, once
+    the listener bus has delivered every event so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return sorted((execs.apply(i) for i in range(execs.size())), key=lambda e: e.executionId())
+
+
+def _last_execution_id(spark) -> int:
+    return max((e.executionId() for e in _sql_executions(spark)), default=-1)
+
+
+def _executed_plans(spark, after: int) -> list[str]:
+    """Physical plans of the SQL executions with an id above `after`
+    (the session is shared across tests, so older executions are
+    skipped)."""
+    return [e.physicalPlanDescription() for e in _sql_executions(spark) if e.executionId() > after]
+
+
+def _seen_join_plan(plans: list[str]) -> tuple[str, str]:
+    """(whole plan, seen-join subtree) of the last executed plan that
+    holds the seen anti-join, the left-anti join keyed on the 8-byte
+    `ch` hash.  The subtree is cut from the final plan's tree by its
+    operator id and the depth of its branch marker."""
+    for plan in reversed(plans):
+        m = re.search(r"^\((\d+)\) [^\n]*\nLeft keys \[\d+\]: \[ch#[^\n]*\n"
+                      r"Right keys[^\n]*\nJoin type: LeftAnti", plan, re.M)
+        if m:
+            break
+    else:
+        raise AssertionError("no seen anti-join among the executed plans")
+    lines = plan.splitlines()
+    top = next(i for i, line in enumerate(lines) if line.endswith(f" ({m[1]})"))
+
+    def depth(line: str) -> int:
+        b = re.search(r"[:+]- ", line)
+        return b.start() if b else len(line) - len(line.lstrip())
+
+    sub = [lines[top]]
+    for line in lines[top + 1:]:
+        if not line.strip() or depth(line) <= depth(lines[top]):
+            break
+        sub.append(line)
+    return plan, "\n".join(sub)
+
+
 def test_seen_join_ships_hashes_only(spark):
     """Plan assertion: the seen anti-join's frontier side projects
     ONLY the 8-byte url_hash — no string column shuffles through the
@@ -190,14 +238,12 @@ def test_seen_join_ships_hashes_only(spark):
     cfg = CrawlConfig(mode="bfs", max_depth=2, max_pages=30,
                       base_budget=8, global_budget=16, max_iterations=3)
     pages, robots, seeds, pages_df, robots_df = _build_inputs(spark)
-    eng_obj = CrawlEngine(spark, cfg, pages_df, robots_df, capture_plans=True)
-    eng_obj.run(seeds)
-    plan = eng_obj.last_plans.get("frontier", "")
+    before = _last_execution_id(spark)
+    CrawlEngine(spark, cfg, pages_df, robots_df).run(seeds)
+    plan, _ = _seen_join_plan(_executed_plans(spark, before))
     assert "LeftAnti" in plan
     # the anti-join build side is a bare url_hash projection
-    import re as _re
-
-    m = _re.search(r"LeftAnti[^\n]*\n(.*)", plan, _re.S)
+    m = re.search(r"LeftAnti[^\n]*\n(.*)", plan, re.S)
     assert m is not None
     # every join between fresh candidates and the frontier keys on ch/url_hash
     assert "ch" in plan and "url_hash" in plan
@@ -358,10 +404,10 @@ def test_at_scale_plan_parity(spark, monkeypatch, cfg_kw, ranks):
         cfg = CrawlConfig(**cfg_kw)
         pages, robots, seeds, pages_df, robots_df = _build_inputs(spark)
         sim = simulate_crawl(pages, robots, seeds, cfg)
-        eng_obj = CrawlEngine(spark, cfg, pages_df, robots_df, capture_plans=True)
-        eng = eng_obj.run(seeds)
+        before = _last_execution_id(spark)
+        eng = CrawlEngine(spark, cfg, pages_df, robots_df).run(seeds)
         _assert_parity(sim, eng)
-        plan = eng_obj.last_plans["seen_join"]
+        _, plan = _seen_join_plan(_executed_plans(spark, before))
         assert "LeftAnti" in plan and "Broadcast" not in plan, plan
         assert ranks <= used, used
     finally:

@@ -1,12 +1,11 @@
 """Unit tests for the training-pipeline operators: dedup cascade,
-similarity search, text analysis, bloom sidecar, multimodal plumbing."""
+similarity search, text analysis, multimodal plumbing."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from crawl4ai_spark.operators import bloom as B
 from crawl4ai_spark.operators import dedup as D
 from crawl4ai_spark.operators import multimodal as M
 from crawl4ai_spark.operators import similarity as S
@@ -136,37 +135,6 @@ def test_word_stats(spark):
     r = df.select(T.word_stats("text").alias("s")).collect()[0]["s"]
     assert r["n_words"] == 3
     assert r["mean_word_len"] == pytest.approx((2 + 2 + 3) / 3)
-
-
-def test_bloom_no_false_negatives(spark):
-    urls = spark.range(500).select(
-        F.concat(F.lit("https://h.test/p"), F.col("id").cast("string")).alias("url")
-    )
-    bl = B.build_bloom(urls, n_buckets=4, m_bits=1 << 14, k=5).cache()
-    probed = B.might_contain(urls, bl, n_buckets=4, m_bits=1 << 14, k=5)
-    assert probed.filter(~F.col("maybe_seen")).count() == 0  # zero false negatives
-
-    fresh = spark.range(500, 1500).select(
-        F.concat(F.lit("https://h.test/p"), F.col("id").cast("string")).alias("url")
-    )
-    fp = B.might_contain(fresh, bl, n_buckets=4, m_bits=1 << 14, k=5)
-    fp_rate = fp.filter(F.col("maybe_seen")).count() / 1000
-    assert fp_rate < 0.05                                    # sized for ~1% FP
-
-    est = B.estimate_cardinality(bl, m_bits=1 << 14, k=5)
-    assert 400 <= est <= 620
-
-
-def test_bloom_merge(spark):
-    a = spark.range(100).select(F.concat(F.lit("a"), F.col("id").cast("string")).alias("url"))
-    b = spark.range(100).select(F.concat(F.lit("b"), F.col("id").cast("string")).alias("url"))
-    bl = B.merge_bloom(
-        B.build_bloom(a, n_buckets=2, m_bits=1 << 12),
-        B.build_bloom(b, n_buckets=2, m_bits=1 << 12),
-    )
-    both = a.unionByName(b)
-    probed = B.might_contain(both, bl, n_buckets=2, m_bits=1 << 12)
-    assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_multimodal_stub_gating():

@@ -5,6 +5,8 @@ snapshot store with atomic manifest swap)."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -137,6 +139,20 @@ def test_resume_of_finished_crawl_keeps_snapshot(spark, tmp_path):
     for name, t in m["tables"].items():
         assert t["rows"] > 0, name
         assert store.load(spark, name).count() == t["rows"], name
+
+
+def test_resume_under_changed_mode_raises(spark, tmp_path):
+    """resume() refuses a config that differs from the committed
+    crawl's in anything but the stop bounds: a changed mode would mix
+    two admission orderings in one frontier."""
+    pages, robots, seeds = _inputs(spark)
+    store = SnapshotStore(str(tmp_path / "store5"))
+    CrawlEngine(spark, _cfg(1), pages, robots, store=store).run(seeds)
+    cfg = replace(_cfg(30), mode="best_first", max_pages=80)
+    with pytest.raises(ValueError, match="mode") as err:
+        CrawlEngine(spark, cfg, pages, robots, store=store).resume()
+    assert "max_pages" not in str(err.value)
+    assert "max_iterations" not in str(err.value)
 
 
 def test_failed_recommit_keeps_live_snapshot(spark, tmp_path):
