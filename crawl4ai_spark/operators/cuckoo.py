@@ -7,8 +7,7 @@ with TTL'd invalidation) need a full rebuild.  The cuckoo filter
 (partial-key cuckoo hashing, Fan et al. 2014 — public) supports
 **deletion** and **incremental insertion** at the same ~const bytes/key,
 which makes it the long-lived cross-run seen state that must drop
-entries when a page's cache entry expires (the streaming crawl's seen
-gate, and plans/recrawl.forget_expired).
+entries when a page's cache entry expires (plans/recrawl.forget_expired).
 
 The filter is a table, so it snapshots through the SnapshotStore
 like any other state: `n_shards` independent filters
@@ -38,7 +37,7 @@ Probe modes:
     probe via pandas_udf: right for a dim-sized filter.
   * cogroup  — shuffle candidates by shard and cogroup-join with the
     filter table, zero driver collect: the 10^10-key scale path (each
-    executor only ever holds its shards), used by the streaming crawl.
+    executor only ever holds its shards).
 
 False-positive rate: P(fp collision in ≤ 2·SLOTS occupied slots)
 ≈ 8/2^16 ≈ 1.2e-4 at full load — same class as the reference's 1%
@@ -125,10 +124,9 @@ def _insert_shard(tab: np.ndarray, stash: np.ndarray, h1: np.ndarray) -> np.ndar
     violation: 'definitely new' for a crawled URL re-crawls it).
     Inserts therefore do NOT skip already-present fingerprints;
     instead, delete-exactness is the CALLER's contract: insert each
-    key at most once (callers add only exactly-new keys — the
-    streaming crawl inserts post-anti-join fresh sets and rebuilds
-    from its DISTINCT seen urls),
-    and delete only keys previously inserted.  Same-key duplicates
+    key at most once (callers add only exactly-new keys, e.g. a
+    post-anti-join fresh set or a DISTINCT seen set), and delete
+    only keys previously inserted.  Same-key duplicates
     WITHIN a batch are deduped below (identical h1 ⇒ same key —
     safe), so a caller-respecting filter holds exactly one copy per
     key plus the collision copies that make deletion safe.
@@ -329,7 +327,7 @@ def cuckoo_probe(
     broadcast can be unpersisted before returning — otherwise a caller
     probing in a loop (one probe per superstep) accumulates broadcast
     blocks for the session lifetime.  Loops that want a lazy plan
-    should use `cuckoo_probe_cogroup` (as the streaming crawl does)."""
+    should use `cuckoo_probe_cogroup`."""
     blobs = {
         int(r["shard"]): _unpack(bytes(r["table"]), bytes(r["stash"]))
         for r in filt.collect()

@@ -754,9 +754,11 @@ class CrawlEngine:
         """The crawl config as the manifest stores it (a JSON round trip)."""
         return json.loads(json.dumps(asdict(self.cfg)))
 
-    def resume(self) -> CrawlResultTables:
+    def resume(self, seeds: list[str] = ()) -> CrawlResultTables:
         """Continue from the store's latest committed snapshot
-        (north rule: resumable from checkpoint).
+        (north rule: resumable from checkpoint), adding `seeds` that
+        the committed frontier does not hold yet as pending depth-0
+        rows enqueued at the snapshot's iteration.
 
         Raises ValueError when the config differs from the one the
         snapshot was committed under: a resume under another mode,
@@ -788,6 +790,16 @@ class CrawlEngine:
             frontier_ub=st.get("frontier_ub", _SMALL_PENDING_MAX + 1),
         )
         frontier = self.store.load(self.spark, "frontier")
+        if seeds:
+            seeded, seed_state = self._seed_frontier(seeds)
+            known = frontier.join(F.broadcast(seeded.select("url_hash")), "url_hash", "left_semi")
+            seeded = seeded.join(F.broadcast(known.select("url_hash")), "url_hash", "left_anti")
+            frontier = frontier.unionByName(seeded.withColumns({
+                "seq": F.col("seq") + F.lit(state.next_seq),
+                "enqueue_iter": F.lit(state.iteration),
+            }))
+            state.next_seq += seed_state.next_seq
+            state.frontier_ub += seed_state.frontier_ub
         docs = self.store.load(self.spark, "docs")
         log = self.store.load(self.spark, "crawl_log")
         return self._loop(frontier, docs, log, state)

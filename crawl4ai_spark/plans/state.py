@@ -28,8 +28,10 @@ per-partition lineage and metrics"): each committed table records its
 part files with per-file row counts / bytes / row-group counts read
 from the parquet footers (Iceberg's manifest-file role), each
 manifest records its parent snapshot id, and the full commit history
-is appended to `_lineage.jsonl` so the snapshot chain survives data
-pruning (Iceberg's metadata log role).  Footer reads are driver-side
+is kept in `_lineage.jsonl` so the snapshot chain survives data
+pruning (Iceberg's metadata log role).  Each commit rewrites that log
+after its manifest swap, and first records the previous manifest
+when a crash kept it out of the log.  Footer reads are driver-side
 pyarrow metadata calls — no extra Spark job.
 
 INTEGRATION GATE: no Iceberg runtime jar is on the pyspark classpath
@@ -118,18 +120,20 @@ class SnapshotStore:
         with open(tmp, "w") as f:
             json.dump(entry, f)
         os.replace(tmp, self._manifest_path)  # atomic commit point
+        log = self.lineage()
+        if replaces:
+            log = [e for e in log if e["snapshot_id"] != snapshot_id]
+        elif prev and (not log or log[-1] != prev):
+            # a crash between the previous commit's swap and its log
+            # write left the live snapshot out of the log: record it
+            # first, so the chain has no gap at this entry's parent
+            log = [e for e in log if e["snapshot_id"] != prev["snapshot_id"]] + [prev]
+        # the log is rewritten and swapped, never appended in place: a
+        # crash mid-write cannot leave a torn line behind
         lpath = os.path.join(self.root, "_lineage.jsonl")
-        if replaces and os.path.exists(lpath):
-            lines = [
-                line for line in open(lpath)
-                if line.strip() and json.loads(line)["snapshot_id"] != snapshot_id
-            ]
-            with open(lpath + ".tmp", "w") as f:
-                f.writelines(lines + [json.dumps(entry) + "\n"])
-            os.replace(lpath + ".tmp", lpath)
-        else:
-            with open(lpath, "a") as f:
-                f.write(json.dumps(entry) + "\n")
+        with open(lpath + ".tmp", "w") as f:
+            f.writelines(json.dumps(e) + "\n" for e in log + [entry])
+        os.replace(lpath + ".tmp", lpath)
         self._prune(entry)
 
     @staticmethod

@@ -5,11 +5,14 @@ snapshot store with atomic manifest swap)."""
 
 from __future__ import annotations
 
+import os
 from dataclasses import replace
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
+from crawl4ai_spark.plans import state as state_mod
 from crawl4ai_spark.plans.config import CrawlConfig
 from crawl4ai_spark.plans.crawl import CrawlEngine
 from crawl4ai_spark.plans.state import SnapshotStore
@@ -33,11 +36,48 @@ def _cfg(max_iterations: int) -> CrawlConfig:
                        max_iterations=max_iterations)
 
 
-def test_kill_and_resume_matches_uninterrupted(spark, tmp_path):
-    pages, robots, seeds = _inputs(spark)
+def _crawl(res) -> dict:
+    """What a resumed crawl must reproduce of an uninterrupted one."""
+    return {
+        "pages_crawled": res.state.pages_crawled,
+        "next_seq": res.state.next_seq,
+        "seen": {r["url"] for r in res.seen.collect()},
+        "log": [(r["iteration"], r["url"], r["outcome"])
+                for r in res.crawl_log.orderBy("iteration", "batch_rank").collect()],
+        "docs": {r["doc_id"] for r in res.docs.collect()},
+        "host_state": {h: (round(d, 9), n) for h, (d, n) in res.state.host_state.items()},
+    }
 
-    # uninterrupted reference run
-    full = CrawlEngine(spark, _cfg(30), pages, robots).run(seeds)
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark):
+    """max_iterations -> `_crawl` of an uninterrupted run, each run once."""
+    runs: dict[int, dict] = {}
+
+    def get(max_iterations: int) -> dict:
+        if max_iterations not in runs:
+            pages, robots, seeds = _inputs(spark)
+            res = CrawlEngine(spark, _cfg(max_iterations), pages, robots).run(seeds)
+            runs[max_iterations] = _crawl(res)
+        return runs[max_iterations]
+
+    return get
+
+
+def _assert_lineage_chain(store: SnapshotStore) -> None:
+    """The lineage log chains snapshots parent -> child with no gap
+    and ends at the manifest's snapshot."""
+    lin = store.lineage()
+    ids = [e["snapshot_id"] for e in lin]
+    assert ids == sorted(set(ids)), f"duplicate/unordered snapshots: {ids}"
+    assert lin[0]["parent_snapshot_id"] is None
+    for prev, cur in zip(lin, lin[1:]):
+        assert cur["parent_snapshot_id"] == prev["snapshot_id"]
+    assert lin[-1]["snapshot_id"] == store.read_manifest()["snapshot_id"]
+
+
+def test_kill_and_resume_matches_uninterrupted(spark, tmp_path, uninterrupted):
+    pages, robots, seeds = _inputs(spark)
 
     # interrupted run: stop after 2 iterations, state committed to the store
     store = SnapshotStore(str(tmp_path / "store"))
@@ -47,27 +87,9 @@ def test_kill_and_resume_matches_uninterrupted(spark, tmp_path):
 
     # resume in a NEW engine (fresh driver state) and finish
     resumed = CrawlEngine(spark, _cfg(30), pages, robots, store=store).resume()
-
-    assert resumed.state.pages_crawled == full.state.pages_crawled
-    assert resumed.state.next_seq == full.state.next_seq
-
-    f_seen = {r["url"] for r in full.seen.collect()}
-    r_seen = {r["url"] for r in resumed.seen.collect()}
-    assert r_seen == f_seen
-
-    f_log = [(r["iteration"], r["url"], r["outcome"])
-             for r in full.crawl_log.orderBy("iteration", "batch_rank").collect()]
-    r_log = [(r["iteration"], r["url"], r["outcome"])
-             for r in resumed.crawl_log.orderBy("iteration", "batch_rank").collect()]
-    assert r_log == f_log
-
-    f_docs = {r["doc_id"] for r in full.docs.collect()}
-    r_docs = {r["doc_id"] for r in resumed.docs.collect()}
-    assert r_docs == f_docs
-
-    hs_f = {h: (round(d, 9), n) for h, (d, n) in full.state.host_state.items()}
-    hs_r = {h: (round(d, 9), n) for h, (d, n) in resumed.state.host_state.items()}
-    assert hs_r == hs_f
+    got = _crawl(resumed)
+    for key, want in uninterrupted(30).items():
+        assert got[key] == want, key
 
 
 class _CountingStore(SnapshotStore):
@@ -112,32 +134,30 @@ def test_manifest_atomicity(spark, tmp_path):
         assert t["rows"] == df.count()
     assert "pages_crawled" in m["metrics"]
     # lineage log chains snapshots parent -> child and survives pruning
-    lin = store.lineage()
-    ids = [e["snapshot_id"] for e in lin]
-    assert ids == sorted(set(ids)), f"duplicate/unordered snapshots: {ids}"
-    assert lin[0]["parent_snapshot_id"] is None
-    for prev, cur in zip(lin, lin[1:]):
-        assert cur["parent_snapshot_id"] == prev["snapshot_id"]
-    assert lin[-1]["snapshot_id"] == m["snapshot_id"]
+    _assert_lineage_chain(store)
 
 
-def test_resume_of_finished_crawl_keeps_snapshot(spark, tmp_path):
+@pytest.mark.parametrize("reseed", [False, True], ids=["no_seeds", "own_seeds"])
+def test_resume_of_finished_crawl_keeps_snapshot(spark, tmp_path, reseed):
     """Resuming a finished crawl runs no superstep and re-commits the
     current snapshot id from tables read out of that very snapshot.
     The re-commit must not read files it has deleted, and must leave a
-    snapshot that loads with the manifest's row counts."""
+    snapshot that loads with the manifest's row counts.  Seeds the
+    frontier already holds add no row."""
     pages, robots, seeds = _inputs(spark)
     store = SnapshotStore(str(tmp_path / "store3"))
     full = CrawlEngine(spark, _cfg(30), pages, robots, store=store).run(seeds)
+    rows = {name: t["rows"] for name, t in store.read_manifest()["tables"].items()}
     resumed = CrawlEngine(
         spark, _cfg(full.state.iteration), pages, robots, store=store
-    ).resume()
+    ).resume(seeds if reseed else ())
+    assert resumed.state.iteration == full.state.iteration
     assert resumed.state.pages_crawled == full.state.pages_crawled
     assert resumed.docs.count() == full.docs.count()
     m = store.read_manifest()
     assert m["snapshot_id"] == full.state.iteration
     for name, t in m["tables"].items():
-        assert t["rows"] > 0, name
+        assert t["rows"] == rows[name] > 0, name
         assert store.load(spark, name).count() == t["rows"], name
 
 
@@ -171,3 +191,67 @@ def test_failed_recommit_keeps_live_snapshot(spark, tmp_path):
     m = store.read_manifest()
     assert m["snapshot_id"] == 1 and m["tables"]["t"]["rows"] == 50
     assert store.load(spark, "t").count() == 50
+
+
+_WRITE_POINTS = ["frontier", "docs", "crawl_log", "manifest_tmp", "swap", "lineage", "prune"]
+
+
+@pytest.mark.parametrize("point", _WRITE_POINTS)
+def test_crash_at_each_commit_write_point_resumes(
+    spark, tmp_path, monkeypatch, uninterrupted, point
+):
+    """A crawl dies inside its second snapshot commit: after a table
+    write lands (an unnamed snapshot directory stays behind), at the
+    manifest tmp write, instead of the manifest swap, at the lineage
+    write after the swap, or in the prune.  A fresh engine resumes to
+    the uninterrupted crawl, and the lineage log has no gap."""
+    pages, robots, seeds = _inputs(spark)
+    store = _CountingStore(str(tmp_path / "store"))
+
+    def crash_at(here: str | None) -> None:
+        if here == point and len(store.committed) == 2:
+            raise RuntimeError(f"injected crash at {here}")
+
+    real_parquet, real_open, real_prune = DataFrameWriter.parquet, open, SnapshotStore._prune
+
+    def parquet(self, path, *a, **kw):
+        real_parquet(self, path, *a, **kw)
+        crash_at(os.path.basename(os.path.dirname(path)))  # <root>/<table>/snap=…
+
+    def open_(path, mode="r", *a, **kw):
+        name = os.path.basename(path)
+        if "r" not in mode:
+            crash_at("manifest_tmp" if name == "_manifest.json.tmp"
+                     else "lineage" if name.startswith("_lineage.jsonl") else None)
+        return real_open(path, mode, *a, **kw)
+
+    class _Os:
+        def __getattr__(self, attr):
+            return getattr(os, attr)
+
+        def replace(self, src, dst):
+            if os.path.basename(dst) == "_manifest.json":
+                crash_at("swap")
+            os.replace(src, dst)
+
+    def prune(self, live):
+        crash_at("prune")
+        real_prune(self, live)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(state_mod, "open", open_, raising=False)
+    monkeypatch.setattr(state_mod, "os", _Os())
+    monkeypatch.setattr(SnapshotStore, "_prune", prune)
+    with pytest.raises(RuntimeError, match=f"injected crash at {point}"):
+        CrawlEngine(spark, _cfg(4), pages, robots, store=store).run(seeds)
+    monkeypatch.undo()
+    swapped = point in ("lineage", "prune")
+    assert store.read_manifest()["snapshot_id"] == (2 if swapped else 1)
+
+    fresh = SnapshotStore(store.root)
+    resumed = CrawlEngine(spark, _cfg(4), pages, robots, store=fresh).resume()
+    assert resumed.state.iteration == 4
+    got = _crawl(resumed)
+    for key, want in uninterrupted(4).items():
+        assert got[key] == want, key
+    _assert_lineage_chain(fresh)
