@@ -1310,15 +1310,17 @@ def q_hash_embed(spark, sf_dir):
     model seam, operators/embedding.hash_embed — reference
     adaptive_crawler.py:612-621 calls an external model; here bucket/
     sign derive from md5(token) so the oracle re-derives identical
-    vectors).  Pure per-row Catalyst fold: no shuffle, no UDF."""
+    vectors).  Pure per-row Catalyst fold: no shuffle, no UDF.  One
+    long row (doc_id, i, value) per vector component, so both engines
+    return plain doubles rather than list cells."""
     from crawl4ai_spark.operators.embedding import hash_embed
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return docs.select(
         "doc_id",
-        F.transform(hash_embed(F.col("text"), 16),
-                    lambda x: F.round(x, 6)).alias("embedding"),
-    ).orderBy("doc_id")
+        F.posexplode(F.transform(hash_embed(F.col("text"), 16),
+                                 lambda x: F.round(x, 6))).alias("i", "value"),
+    ).orderBy("doc_id", "i")
 
 
 def q_embedding_coverage(spark, sf_dir):
@@ -1616,13 +1618,15 @@ def _interleaved_table(spark, sf_dir):
 
 def q_render_training(spark, sf_dir):
     """Interleaved span docs → one training string per doc with
-    <|image|> placeholders + media refs in placeholder order."""
+    <|image|> placeholders + media refs in placeholder order, joined
+    with '|'."""
     from crawl4ai_spark.operators.interleaved import render_for_training
 
     docs = _interleaved_table(spark, sf_dir)
     r = render_for_training("spans")
     return docs.select(
-        "doc_id", r["text"].alias("training_text"), r["media_refs"].alias("media_refs")
+        "doc_id", r["text"].alias("training_text"),
+        F.concat_ws("|", r["media_refs"]).alias("media_refs"),
     ).orderBy("doc_id")
 
 
@@ -2144,24 +2148,59 @@ def q_cc_seed(spark, sf_dir):
     return cc_index_seed(cc, "example.test", "*/en/*")
 
 
-# ── the crawl loop itself (iterative; no single-SQL oracle) ──────────
+# ── the crawl loop itself (iterative; simulator-computed oracle) ─────
+
+def _crawl_bfs_setup():
+    """The synthetic web and crawl config shared by q_crawl_bfs and
+    its oracle."""
+    from crawl4ai_spark.plans.config import CrawlConfig
+    from crawl4ai_spark.sources.synthetic_web import WebConfig
+
+    return (WebConfig(n_pages=80, n_hosts=4, seed=42),
+            CrawlConfig(mode="bfs", max_depth=2, max_pages=12,
+                        base_budget=8, global_budget=16, max_iterations=6))
+
+
+def _crawl_bfs_sql() -> str:
+    """Oracle for q_crawl_bfs: the pure-Python simulator (the crawl
+    parity suite's reference) runs the same crawl, and its crawl log is
+    inlined as a VALUES list.  batch_rank is the 1-based position within
+    the iteration, in admission order."""
+    from crawl4ai_spark.sources.synthetic_web import (
+        robots_rows, seed_urls, synthetic_pages_pdf,
+    )
+    from crawl4ai_spark.testing.simulator import simulate_crawl
+
+    web, cfg = _crawl_bfs_setup()
+    pages = {r["url"]: r for r in synthetic_pages_pdf(web).to_dict("records")}
+    robots = {r["host"]: r["rules"] for r in robots_rows(web)}
+    sim = simulate_crawl(pages, robots, seed_urls(web, n_seeds=4), cfg)
+    rank: dict[int, int] = {}
+    rows = []
+    for e in sim.crawl_order:  # synthetic URLs hold no quotes
+        rank[e["iteration"]] = rank.get(e["iteration"], 0) + 1
+        rows.append(f"({e['iteration']}, '{e['url']}', {e['depth']}, "
+                    f"'{e['outcome']}', {rank[e['iteration']]})")
+    return f"""
+        SELECT * FROM (VALUES {", ".join(rows)})
+          AS t(iteration, url, depth, outcome, batch_rank)
+        ORDER BY iteration, batch_rank
+    """
+
 
 def q_crawl_bfs(spark, sf_dir):
     """End-to-end BFS crawl of the deterministic synthetic web —
-    returns the crawl log.  Iterative + stateful, so no SQL oracle;
-    correctness is pinned by the simulator parity suite
-    (tests/test_crawl_parity.py)."""
-    from crawl4ai_spark.plans.config import CrawlConfig
+    returns the crawl log.  Its oracle is the simulator's crawl of the
+    same web (`_crawl_bfs_sql`); the full engine-vs-simulator parity
+    suite is tests/test_crawl_parity.py."""
     from crawl4ai_spark.plans.crawl import CrawlEngine
     from crawl4ai_spark.sources.synthetic_web import (
-        WebConfig, robots_rows, seed_urls, synthetic_pages_df,
+        robots_rows, seed_urls, synthetic_pages_df,
     )
 
-    web = WebConfig(n_pages=80, n_hosts=4, seed=42)
+    web, cfg = _crawl_bfs_setup()
     pages = synthetic_pages_df(spark, web).cache()
     robots = spark.createDataFrame(robots_rows(web))
-    cfg = CrawlConfig(mode="bfs", max_depth=2, max_pages=12,
-                      base_budget=8, global_budget=16, max_iterations=6)
     res = CrawlEngine(spark, cfg, pages, robots).run(seed_urls(web, n_seeds=4))
     return res.crawl_log.orderBy("iteration", "batch_rank").select(
         "iteration", "url", "depth", "outcome", "batch_rank"
@@ -3354,10 +3393,10 @@ def oracle_sql() -> dict[str, str]:
               LEFT JOIN dv ON dv.doc_id = g.doc_id AND dv.b = g.i
               LEFT JOIN dn ON dn.doc_id = g.doc_id
             )
-            SELECT doc_id, list(x ORDER BY i) AS embedding
-            FROM vals GROUP BY doc_id ORDER BY doc_id
+            SELECT doc_id, i, x AS value FROM vals ORDER BY doc_id, i
         """,
         "embedding_coverage": _EMBEDDING_COVERAGE_SQL,
+        "crawl_bfs": _crawl_bfs_sql(),
         "embedding_shape": _embedding_shape_sql(),
         "embedding_select": _embedding_select_sql(),
         "quality_quantiles": """
@@ -3674,8 +3713,8 @@ def oracle_sql() -> dict[str, str]:
                      (('0x' || substr(md5(doc_id::VARCHAR), 9, 8))::BIGINT % 8)::INT AS bucket
               FROM documents
             ), c AS (
-              SELECT *, sum(n_tokens) OVER (
-                PARTITION BY bucket ORDER BY u01, doc_id ROWS UNBOUNDED PRECEDING) AS cum
+              SELECT *, (sum(n_tokens) OVER (
+                PARTITION BY bucket ORDER BY u01, doc_id ROWS UNBOUNDED PRECEDING))::BIGINT AS cum
               FROM t
             )
             SELECT doc_id, bucket, (cum - n_tokens) AS start_offset,
@@ -3692,15 +3731,15 @@ def oracle_sql() -> dict[str, str]:
                      (('0x' || substr(md5(doc_id::VARCHAR), 9, 8))::BIGINT % 8)::INT AS bucket
               FROM documents
             ), c AS (
-              SELECT *, sum(n_tokens) OVER (
-                PARTITION BY bucket ORDER BY u01, doc_id ROWS UNBOUNDED PRECEDING) AS cum
+              SELECT *, (sum(n_tokens) OVER (
+                PARTITION BY bucket ORDER BY u01, doc_id ROWS UNBOUNDED PRECEDING))::BIGINT AS cum
               FROM t
             ), p AS (
               SELECT bucket::BIGINT * 4294967296 + ((cum - n_tokens) // 512) AS seq_id,
                      n_tokens
               FROM c
             )
-            SELECT seq_id, count(*)::INT AS n_docs, sum(n_tokens) AS tokens_started,
+            SELECT seq_id, count(*)::INT AS n_docs, sum(n_tokens)::BIGINT AS tokens_started,
                    round(sum(n_tokens) / 512.0, 6) AS fill_ratio
             FROM p GROUP BY seq_id ORDER BY seq_id
         """,
@@ -3811,8 +3850,8 @@ def oracle_sql() -> dict[str, str]:
               SELECT *, CASE lang WHEN 'en' THEN 2000.0 WHEN 'de' THEN 1000.0 END AS budget
               FROM t WHERE lang IN ('en', 'de')
             ), c AS (
-              SELECT *, sum(n_tokens) OVER (
-                PARTITION BY lang ORDER BY u01, doc_id ROWS UNBOUNDED PRECEDING) AS cum
+              SELECT *, (sum(n_tokens) OVER (
+                PARTITION BY lang ORDER BY u01, doc_id ROWS UNBOUNDED PRECEDING))::BIGINT AS cum
               FROM b
             )
             SELECT doc_id, lang, n_tokens, cum AS cum_weight, round(u01, 6) AS u01
@@ -3845,7 +3884,7 @@ def oracle_sql() -> dict[str, str]:
                            AND sig <> lag(sig) OVER w THEN 1 ELSE 0 END AS chg
               FROM h WINDOW w AS (PARTITION BY page_id ORDER BY ts, event_id)
             ), per AS (
-              SELECT page_id, count(*) AS n_obs, sum(chg) AS n_changes,
+              SELECT page_id, count(*) AS n_obs, sum(chg)::BIGINT AS n_changes,
                      floor(date_part('epoch', min(ts)))::BIGINT AS f,
                      floor(date_part('epoch', max(ts)))::BIGINT AS l
               FROM c GROUP BY page_id
@@ -4089,8 +4128,10 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id,
                    array_to_string(list_transform(spans,
                      s -> CASE WHEN s.kind = 'text' THEN s.text ELSE '<|image|>' END), ' ') AS training_text,
-                   list_transform(list_filter(spans, s -> s.kind = 'media'),
-                                  s -> s.media_ref) AS media_refs
+                   -- Spark's concat_ws joins no refs to '', DuckDB's array_to_string to NULL
+                   coalesce(array_to_string(list_transform(
+                     list_filter(spans, s -> s.kind = 'media'), s -> s.media_ref), '|'), '')
+                     AS media_refs
             FROM sp ORDER BY doc_id
         """,
         "span_integrity": f"""

@@ -231,42 +231,28 @@ def cmd_crawl(args) -> None:
         h_, rules_ = _fetch_robots(args.url)
         robots_map = {h_: rules_}
     step = make_step_udf(robots_map, overrides.get("user_agent", "crawl4ai-spark"))
-    df = (
-        spark.createDataFrame([(args.url,)], "url string")
-        .select("url", fetch(F.col("url")).alias("f"))
-        .select(
-            "url",
-            F.col("f.status_code").alias("status"),
-            F.col("f.error").alias("error"),
-            step(
-                F.col("url"), F.lit(host), F.coalesce("f.final_url", "url"),
-                F.col("f.html"), F.col("f.status_code"),
-            ).alias("ex"),
-        )
-    )
+    cols = [
+        "url",
+        F.col("f.status_code").alias("status"),
+        F.col("f.error").alias("error"),
+        step(
+            F.col("url"), F.lit(host), F.coalesce("f.final_url", "url"),
+            F.col("f.html"), F.col("f.status_code"),
+        ).alias("ex"),
+    ]
     if args.output in ("markdown-fit", "md-fit"):
         # E5 pruning filter over the fetched html (same UDF the
         # fit_markdown oracle query uses)
         from crawl4ai_spark.extraction.pruning import make_fit_markdown_udf
 
-        df = (
-            spark.createDataFrame([(args.url,)], "url string")
-            .select("url", fetch(F.col("url")).alias("f"))
-            .select(
-                "url",
-                F.col("f.status_code").alias("status"),
-                F.col("f.error").alias("error"),
-                step(
-                    F.col("url"), F.lit(host), F.coalesce("f.final_url", "url"),
-                    F.col("f.html"), F.col("f.status_code"),
-                ).alias("ex"),
-                make_fit_markdown_udf()(F.col("url"), F.col("f.html"))
-                .alias("fit_markdown"),
-            )
-        )
-    else:
-        df = df.withColumn("fit_markdown", F.lit(None).cast("string"))
-    row = df.collect()[0]
+        cols.append(make_fit_markdown_udf()(F.col("url"), F.col("f.html"))
+                    .alias("fit_markdown"))
+    row = (
+        spark.createDataFrame([(args.url,)], "url string")
+        .select("url", fetch(F.col("url")).alias("f"))
+        .select(*cols)
+        .collect()[0]
+    )
     if row["error"] and not row["ex"]["success"]:
         print(f"# fetch error: {row['error']}", file=sys.stderr)
         sys.exit(2)

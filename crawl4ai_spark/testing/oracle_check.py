@@ -1,6 +1,8 @@
 """Side-by-side Spark-vs-DuckDB oracle checker — a local mirror of
-the driver's correctness gate (row count + schema + order-insensitive
-value comparison with column names sorted).
+the driver's correctness gate, at least as strict as its hash compare:
+sorted column names, row count, one dtype kind per column (int of any
+width, float, bool, datetime of any unit, object), no list/array/dict/
+Row cells, and exactly equal values after sorting the rows.
 
 Run all queries:   python -m crawl4ai_spark.testing.oracle_check [sf_dir]
 Run one query:     python -m crawl4ai_spark.testing.oracle_check sf_dir name
@@ -8,13 +10,16 @@ Run one query:     python -m crawl4ai_spark.testing.oracle_check sf_dir name
 
 from __future__ import annotations
 
-import math
 import sys
 
+import numpy as np
 import pandas as pd
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
+
+# numpy dtype kind → the kind both frames must share
+_KINDS = {"i": "int", "u": "int", "f": "float", "b": "bool", "M": "datetime"}
 
 
 def duckdb_con(sf_dir: str):
@@ -26,89 +31,68 @@ def duckdb_con(sf_dir: str):
     return con
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).dt.tz_localize(None).astype(str)
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif pd.api.types.is_bool_dtype(df[c]):
-            df[c] = df[c].astype(bool)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
+def _kind(s: pd.Series) -> str:
+    return _KINDS.get(s.dtype.kind, "object")
 
 
-def compare_frames(a: pd.DataFrame, b: pd.DataFrame, float_tol: float = 1e-9) -> list[str]:
-    problems: list[str] = []
-    if sorted(a.columns) != sorted(b.columns):
-        return [f"schema mismatch: {sorted(a.columns)} vs {sorted(b.columns)}"]
+def _has_nested(s: pd.Series) -> bool:
+    # pyspark Rows are tuples; DuckDB lists arrive as numpy arrays
+    return s.dtype == object and bool(
+        s.map(lambda v: isinstance(v, (list, tuple, dict, np.ndarray))).any())
+
+
+def compare_frames(a: pd.DataFrame, b: pd.DataFrame) -> list[str]:
+    """The reasons `a` (Spark) and `b` (DuckDB) differ; [] if they match."""
+    cols = sorted(a.columns)
+    if cols != sorted(b.columns):
+        return [f"schema mismatch: {cols} vs {sorted(b.columns)}"]
     if len(a) != len(b):
-        problems.append(f"row count mismatch: {len(a)} vs {len(b)}")
-    a, b = _normalize(a), _normalize(b)
-    n = min(len(a), len(b))
-    for c in a.columns:
-        av, bv = a[c].iloc[:n], b[c].iloc[:n]
-        if pd.api.types.is_float_dtype(av) or pd.api.types.is_float_dtype(bv):
-            bad = 0
-            for x, y in zip(av.astype(float), bv.astype(float)):
-                if (math.isnan(x) and math.isnan(y)):
-                    continue
-                if abs(x - y) > float_tol:
-                    bad += 1
-            if bad:
-                problems.append(f"column {c}: {bad} float mismatches (tol {float_tol})")
-        else:
-            neq = (av.astype(str) != bv.astype(str)).sum()
-            if neq:
-                idx = (av.astype(str) != bv.astype(str)).idxmax()
-                problems.append(
-                    f"column {c}: {neq} mismatches, first at row {idx}: "
-                    f"{av.iloc[idx]!r} vs {bv.iloc[idx]!r}"
-                )
+        return [f"row count mismatch: {len(a)} vs {len(b)}"]
+    problems = [f"column {c}: dtype {a[c].dtype} vs {b[c].dtype}"
+                for c in cols if _kind(a[c]) != _kind(b[c])]
+    problems += [f"column {c}: list cell in {side}" for c in cols
+                 for side, df in (("spark", a), ("oracle", b)) if _has_nested(df[c])]
+    if problems:
+        return problems
+    a, b = (df[cols].sort_values(by=cols, kind="mergesort").reset_index(drop=True)
+            for df in (a, b))
+    for c in cols:
+        bad = ~((a[c] == b[c]) | (a[c].isna() & b[c].isna()))
+        if bad.any():
+            i = int(bad.to_numpy().argmax())
+            problems.append(f"column {c}: {int(bad.sum())} mismatches, first at "
+                            f"row {i}: {a[c].iloc[i]!r} vs {b[c].iloc[i]!r}")
     return problems
 
 
-def check_query(spark, con, name: str, sf_dir: str) -> list[str]:
-    import __spark_entry__ as entry_mod
-
-    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
-    spark_df = qs[name](spark, sf_dir).toPandas()
-    if name not in oracles:
-        return [] if len(spark_df) >= 0 else ["spark query failed"]
-    duck_df = con.sql(oracles[name]).df()
-    return compare_frames(spark_df, duck_df)
+def check(df, con, sql: str | None) -> list[str]:
+    """Run the Spark DataFrame `df` and its oracle `sql` and compare."""
+    if sql is None:
+        return ["no oracle"]
+    return compare_frames(df.toPandas(), con.sql(sql).df())
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = sys.argv[2] if len(sys.argv) > 2 else None
+def main(argv: list[str]) -> int:
+    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
 
     import __spark_entry__ as entry_mod
     from crawl4ai_spark.session import get_spark
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     con = duckdb_con(sf_dir)
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
+    qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
+    names = argv[1:2] or list(qs)
     failures = 0
-    for name in qs:
-        if only and name != only:
-            continue
+    for name in names:
         try:
-            problems = check_query(spark, con, name, sf_dir)
+            problems = check(qs[name](spark, sf_dir), con, oracles.get(name))
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: EXCEPTION {type(e).__name__}: {str(e)[:400]}")
-            failures += 1
-            continue
-        if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems[:4]))
-            failures += 1
-        else:
-            tag = "ok   " if name in oracles else "ok(rows-only)"
-            print(f"{tag} {name}")
-    print(f"\n{failures} failures / {len(qs)} queries")
+            problems = [f"EXCEPTION {type(e).__name__}: {str(e)[:400]}"]
+        failures += bool(problems)
+        print(f"FAIL  {name}: {problems[0]}" if problems else f"ok    {name}")
+    print(f"\n{failures} failures / {len(names)} queries")
     return 1 if failures else 0
 
 
 if __name__ == "__main__":
-    raise SystemExit(main())
+    raise SystemExit(main(sys.argv[1:]))

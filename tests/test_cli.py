@@ -69,16 +69,23 @@ def site(tmp_path_factory):
     srv.shutdown()
 
 
-def test_single_page_markdown_file_url(tmp_path):
+@pytest.mark.parametrize("output", ["markdown", "md-fit"])
+def test_single_page_markdown_file_url(tmp_path, output):
     page = tmp_path / "p.html"
     page.write_text(
-        "<html><head><title>T</title></head><body><h1>Hello CLI</h1>"
-        "<p>body text</p></body></html>"
+        "<html><head><title>T</title></head><body>"
+        '<nav><a href="/a">Home</a> | <a href="/b">About</a></nav>'
+        "<h1>Hello CLI</h1><p>body text</p>"
+        "<footer>Copyright footer</footer></body></html>"
     )
     # naked-URL shorthand implies `crawl` (reference cli.py:1466)
-    r = _run([f"file://{page}", "-o", "markdown"])
+    r = _run([f"file://{page}", "-o", output])
     assert r.returncode == 0, r.stderr[-2000:]
     assert "# Hello CLI" in r.stdout and "body text" in r.stdout
+    # md-fit's pruning filter drops the nav and footer
+    keeps_boilerplate = output == "markdown"
+    assert ("Copyright footer" in r.stdout) is keeps_boilerplate
+    assert ("[Home](/a)" in r.stdout) is keeps_boilerplate
 
 
 def test_deep_crawl_json_lines(site):
